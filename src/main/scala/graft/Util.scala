@@ -124,18 +124,26 @@ object Util {
     graft.functions.BloomFunctions.register(sess)
     val ItemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     val BitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    def raise(key: String, v: Long): Option[String] = {
+    /** Raises `key` to `v` if its effective value is below it; returns
+      * the key's explicit session setting (None when unset) iff raised.
+      */
+    def raise(key: String, v: Long): Option[Option[String]] = {
+      val explicit = sess.conf.getAll.get(key)
       val cur = try sess.conf.getOption(key) catch { case _: Throwable => None }
-      if (v > cur.map(_.toLong).getOrElse(0L)) { sess.conf.set(key, v.toString); cur }
+      if (v > cur.map(_.toLong).getOrElse(0L)) { sess.conf.set(key, v.toString); Some(explicit) }
       else None
+    }
+    def restore(key: String, prior: Option[Option[String]]): Unit = prior.foreach {
+      case Some(v) => sess.conf.set(key, v)
+      case None => sess.conf.unset(key)
     }
     val priorItems = raise(ItemsKey, items)
     val priorBits = raise(BitsKey, bits)
     try df.select(expr(s"bloom_filter_agg($hashExpr, ${items}L, ${bits}L)"))
       .head().getAs[Array[Byte]](0)
     finally {
-      priorItems.foreach(sess.conf.set(ItemsKey, _))
-      priorBits.foreach(sess.conf.set(BitsKey, _))
+      restore(ItemsKey, priorItems)
+      restore(BitsKey, priorBits)
     }
   }
 
@@ -157,19 +165,24 @@ object Util {
     * call-site convention. Threads are daemons; an abandoned task can
     * never pin JVM shutdown.
     */
-  private def daemonPool(name: String, n: Int) =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(n,
-        new java.util.concurrent.ThreadFactory {
-          private val i = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"$name-${i.getAndIncrement()}")
-            t.setDaemon(true); t
-          }
-        }))
+  private def daemonExecutor(name: String, n: Int) =
+    new java.util.concurrent.ThreadPoolExecutor(n, n, 0L,
+      java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      new java.util.concurrent.ThreadFactory {
+        private val i = new java.util.concurrent.atomic.AtomicInteger(0)
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"$name-${i.getAndIncrement()}")
+          t.setDaemon(true); t
+        }
+      })
+
+  /** The executors behind [[jobPool]] and [[queryPool]]. */
+  private[graft] lazy val jobExecutor = daemonExecutor("graft-job", 4)
+  private[graft] lazy val queryExecutor = daemonExecutor("graft-query", 2)
 
   lazy val jobPool: scala.concurrent.ExecutionContextExecutorService =
-    daemonPool("graft-job", 4)
+    scala.concurrent.ExecutionContext.fromExecutorService(jobExecutor)
   lazy val queryPool: scala.concurrent.ExecutionContextExecutorService =
-    daemonPool("graft-query", 2)
+    scala.concurrent.ExecutionContext.fromExecutorService(queryExecutor)
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * time (`Handler.java:72-89`), an implied ceiling of order 10–10²
   * records/second per function instance (BASELINE.md; throughput ≈
   * 1/(2·RTT)). This harness runs the SAME semantics (gate → decode →
-  * JSON extract → ordered batched sink → max_by checkpoint upsert →
+  * JSON extract → ordered batched sink → checkpoint upsert →
   * metrics) as the Spark pipeline over N synthetic Kinesis-shaped
   * records and reports end-to-end records/second on one node.
   *

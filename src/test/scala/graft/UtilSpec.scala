@@ -54,12 +54,12 @@ class UtilSpec extends SparkSpec {
     // deadlock) because the leaf pool never waits on anything.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    def cap(ec: java.util.concurrent.ExecutorService): Int = ec match {
-      case t: java.util.concurrent.ThreadPoolExecutor => t.getMaximumPoolSize
-      case other => fail(s"expected a bounded ThreadPoolExecutor: $other")
+    def cap(t: java.util.concurrent.ThreadPoolExecutor): Int = {
+      assert(t.getCorePoolSize === t.getMaximumPoolSize, "fixed-size pool")
+      t.getMaximumPoolSize
     }
-    assert(cap(Util.jobPool) === 4)
-    assert(cap(Util.queryPool) === 2)
+    assert(cap(Util.jobExecutor) === 4)
+    assert(cap(Util.queryExecutor) === 2)
     // more parents than queryPool threads, each fanning more leaves than
     // jobPool threads — completes only if the pool graph is deadlock-free
     val parents = (1 to 4).map { p =>
@@ -70,5 +70,31 @@ class UtilSpec extends SparkSpec {
     }
     val sums = parents.map(Await.result(_, 60.seconds))
     assert(sums === (1 to 4).map(p => (1 to 8).map(p * 100 + _).sum))
+  }
+
+  test("bloomBytes restores the bloom size clamps after a normal return and after a failure") {
+    import spark.implicits._
+    val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    def explicit(k: String) = spark.conf.getAll.get(k)
+    val df = Seq(1L, 2L, 3L).toDF("x").coalesce(1)
+    // one above each default clamp, so both keys are raised
+    val (items, bits) = (4000001L, 67108864L + 64)
+    try {
+      keys.foreach(spark.conf.unset)
+      assert(Util.bloomBytes(df, "xxhash64(x)", items, bits) != null)
+      keys.foreach(k => assert(explicit(k) === None, s"$k leaked after a normal return"))
+      intercept[Exception](Util.bloomBytes(df, "xxhash64(no_such_column)", items, bits))
+      keys.foreach(k => assert(explicit(k) === None, s"$k leaked after a failure"))
+      // an explicit prior setting comes back as it was
+      spark.conf.set(keys.head, "7")
+      intercept[Exception](Util.bloomBytes(df, "xxhash64(no_such_column)", items, bits))
+      assert(explicit(keys.head) === Some("7"))
+      assert(explicit(keys(1)) === None)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

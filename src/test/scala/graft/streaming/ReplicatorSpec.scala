@@ -32,7 +32,7 @@ class ReplicatorSpec extends SparkSpec {
   }
 
   test("activeStreams: unique + case-insensitive region match only (Handler.java:152-166)") {
-    val active = Replicator.activeStreams(configDf, "US-EAST-1").collect().map(_.getString(0))
+    val active = Replicator.activeStreams(configDf, "US-EAST-1")
     assert(active.toSet === Set("s-active")) // dup excluded, elsewhere excluded, missing absent
   }
 
@@ -46,14 +46,44 @@ class ReplicatorSpec extends SparkSpec {
     assert(df.schema("commitTimestamp").dataType.typeName === "string")
   }
 
-  test("checkpointRows: max_by numeric sequence order, not lexicographic") {
+  test("summary: checkpoint uses numeric sequence order, not lexicographic") {
     import spark.implicits._
     // seq "9" < "10" numerically ordered ⇒ winner is seq "10"
     val batch = Replicator.parse(Seq(
       rec("s", "1", "9", 1000L, 1L, "2021-01-01T00:00:09Z"),
       rec("s", "1", "10", 2000L, 2L, "2021-01-01T00:00:10Z")).toDS().toDF())
-    val cp = Replicator.checkpointRows(batch).head()
+    val cp = Replicator.summary(batch).head()
     assert(cp.getString(1) === "2021-01-01T00:00:10Z")
+  }
+
+  test("summary equals groupBy + max_by over a seeded 64-stream batch on several partitions") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(64)
+    // distinct sequence numbers of 1-7 digits, so (length, lex) order and
+    // plain string order disagree; some arrivals unknown, one stream never
+    // has one
+    val seqs = rnd.shuffle((1 to 3000).map(i => (i.toLong * i).toString))
+    val rows = seqs.zipWithIndex.map { case (seq, i) =>
+      val stream = s"s-${rnd.nextInt(64)}"
+      val arrival = if (stream == "s-7" || rnd.nextInt(20) == 0) None
+        else Some(new Timestamp(1600000000000L + rnd.nextInt(1000000000)))
+      (stream, seq, s"commit-$i", arrival)
+    }
+    val batch = rows.toDF("streamName", "sequenceNumber", "commitTimestamp",
+      "approximateArrivalTimestamp").repartition(3)
+    assert(batch.rdd.getNumPartitions >= 2)
+
+    val got = Replicator.summary(batch)
+    assert(got.columns.toSeq === Seq("streamName", "lastReplicatedCommitTimestamp",
+      "lastSequenceNumber", "records", "lastArrivalMicros"))
+    val seqOrder = struct(length($"sequenceNumber"), $"sequenceNumber")
+    val want = batch.groupBy($"streamName").agg(
+      max_by($"commitTimestamp", seqOrder), max_by($"sequenceNumber", seqOrder),
+      count(lit(1)), max(unix_micros($"approximateArrivalTimestamp")))
+    def rowSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(got.count() === 64)
+    assert(rowSet(got) === rowSet(want))
+    assert(got.filter($"streamName" === "s-7").head().isNullAt(4))
   }
 
   test("end-to-end: gate filters streams, target preserves partitionKey, checkpoint + metrics written") {
@@ -180,5 +210,146 @@ class ReplicatorSpec extends SparkSpec {
       .awaitTermination(60000)
     val rows = spark.read.parquet(target).collect()
     assert(rows.length === 1 && rows.head.getAs[String]("sequenceNumber") === "501")
+  }
+
+  /** Runs one replicator query to completion over `records`, gated by
+    * the config in `configDir`; returns its target, checkpoint and
+    * metrics directories.
+    */
+  private def replicate(records: Seq[KinesisRecord], configDir: String): (String, String, String) = {
+    import spark.implicits._
+    val mem = MemoryStream[KinesisRecord](spark)
+    mem.addData(records: _*)
+    val (target, cpTable, metrics, scp) =
+      (tmpDir("target"), tmpDir("cptable"), tmpDir("metrics"), tmpDir("scp"))
+    val q = Replicator.run(spark, mem.toDF(), configDir, "us-east-1", target, cpTable, metrics, scp)
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    (target, cpTable, metrics)
+  }
+
+  private def dataFiles(dir: String): Seq[java.io.File] = {
+    def walk(d: java.io.File): Seq[java.io.File] = Option(d.listFiles()).toSeq.flatten.flatMap {
+      f => if (f.isDirectory) walk(f) else Seq(f).filter(_.getName.endsWith(".parquet"))
+    }
+    walk(new java.io.File(dir))
+  }
+
+  private val twoStreams = Seq(
+    rec("s-active", "pk-1", "101", 1000L, 1L, "2021-11-10T04:00:01Z"),
+    rec("s-elsewhere", "pk-2", "201", 2000L, 2L, "2021-11-10T04:00:02Z"))
+
+  test("a batch with no active stream writes no target, checkpoint or metrics rows") {
+    import spark.implicits._
+    // no stream of this region is configured at all
+    val cfgDir = tmpDir("cfg_none")
+    Seq(("s-active", "eu-west-1"), ("s-elsewhere", "eu-west-1"))
+      .toDF("streamName", "activeRegion").write.mode("overwrite").parquet(cfgDir)
+    val (target, cpTable, metrics) = replicate(twoStreams, cfgDir)
+    Seq(target, cpTable, metrics).foreach(d => assert(dataFiles(d).isEmpty, d))
+    // another stream is active, but none of this batch's records are in it
+    val cfgOther = tmpDir("cfg_other")
+    Seq(("s-other", "us-east-1")).toDF("streamName", "activeRegion")
+      .write.mode("overwrite").parquet(cfgOther)
+    val (target2, cpTable2, metrics2) = replicate(twoStreams, cfgOther)
+    Seq(target2, cpTable2, metrics2).foreach(d => assert(dataFiles(d).isEmpty, d))
+  }
+
+  test("an empty config directory gates every stream off (missing → inactive)") {
+    val cfgDir = tmpDir("cfg_empty")
+    val (target, cpTable, metrics) = replicate(twoStreams, cfgDir)
+    Seq(target, cpTable, metrics).foreach(d => assert(dataFiles(d).isEmpty, d))
+  }
+
+  test("a config with an extra column still gates by streamName and activeRegion") {
+    import spark.implicits._
+    val cfgDir = tmpDir("cfg_extra")
+    Seq(("owner-a", "s-active", "us-east-1"), ("owner-b", "s-elsewhere", "eu-west-1"))
+      .toDF("owner", "streamName", "activeRegion").write.mode("overwrite").parquet(cfgDir)
+    val (target, cpTable, _) = replicate(twoStreams, cfgDir)
+    val rows = spark.read.parquet(target).collect()
+    assert(rows.map(_.getAs[String]("streamName")).toSeq === Seq("s-active"))
+    assert(spark.read.parquet(cpTable).collect().map(_.getAs[String]("streamName")).toSeq
+      === Seq("s-active"))
+  }
+
+  test("job-count lock: a micro-batch runs at most 4 jobs and its forward write has no Exchange") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{CollectMetricsExec, CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.streaming.runtime.{MicroBatchExecution, StreamExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val cfgDir = tmpDir("cfg_jobs")
+    (0 until 6).map(i => (s"s-$i", if (i == 5) "eu-west-1" else "us-east-1"))
+      .toDF("streamName", "activeRegion").write.mode("overwrite").parquet(cfgDir)
+    val records = (1 to 60).map(i =>
+      rec(s"s-${i % 6}", s"pk-$i", s"${1000 + i}", i * 1000L, i.toLong, f"2021-11-10T05:00:$i%02dZ"))
+
+    // (queryId, batchId) of every job, and every successful write's execution
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        jobs.add((p.getProperty(StreamExecution.QUERY_ID_KEY),
+          p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
+      }
+    }
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // both listeners must exist before the query clones its session
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    val mem = MemoryStream[KinesisRecord](spark)
+    mem.addData(records: _*)
+    val (target, cpTable, metrics, scp) =
+      (tmpDir("target_jobs"), tmpDir("cptable_jobs"), tmpDir("metrics_jobs"), tmpDir("scp_jobs"))
+    val q = try {
+      val q = Replicator.run(spark, mem.toDF(), cfgDir, "us-east-1", target, cpTable, metrics, scp)
+      q.awaitTermination(60000)
+      // deliver every queued listener event before reading the counts
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      q
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    assert(spark.read.parquet(target).count() === 50)
+
+    val perBatch = jobs.toArray(Array.empty[(String, String)]).toSeq
+      .filter(_._1 == q.id.toString).groupBy(_._2).view.mapValues(_.size).toMap
+    assert(perBatch.nonEmpty, "no job of the query was seen")
+    // config read, forward write, checkpoint write, metrics write
+    assert(perBatch.values.forall(_ <= 4), s"jobs per micro-batch: $perBatch")
+
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val targetName = new java.io.File(target).getName
+    val forward = qes.toArray(Array.empty[QueryExecution]).toSeq
+      .map(qe => nodes(qe.executedPlan)).filter(_.exists {
+        case d: DataWritingCommandExec => d.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == targetName
+          case _ => false
+        }
+        case _ => false
+      })
+    assert(forward.size === 1, "one forward write per micro-batch")
+    val plan = forward.head
+    assert(!plan.exists(_.isInstanceOf[Exchange]), plan.mkString("\n"))
+    // the per-stream summary is ONE aggregate, however many streams pass
+    val observed = plan.collect { case c: CollectMetricsExec if c.name != "replicator" => c }
+    assert(observed.map(_.metricExpressions.size) === Seq(1))
   }
 }

@@ -885,15 +885,17 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("micro-batch replay: checkpoint upsert is idempotent, target accepts duplicates (SURVEY §7.4)") {
+    import org.apache.spark.sql.functions._
     import spark.implicits._
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val recs = Seq(
       ("s1", "7", "T07", "pk"), ("s1", "10", "T10", "pk"), ("s2", "3", "T03", "pk"))
       .toDF("streamName", "sequenceNumber", "commitTimestamp", "partitionKey")
+      .withColumn("approximateArrivalTimestamp", timestamp_seconds(lit(0L)))
     val cpDir = tmpDir("replay_cp")
     // deliver the same micro-batch twice (at-least-once re-delivery)
     (1 to 2).foreach { _ =>
-      Replicator.checkpointRows(recs)
+      Replicator.summary(recs).select("streamName", "lastReplicatedCommitTimestamp")
         .write.mode("overwrite").partitionBy("streamName").parquet(cpDir)
     }
     val cp = spark.read.parquet(cpDir).collect()
