@@ -154,7 +154,7 @@ object Bench {
     // Per-query regression gate against the PREVIOUS recorded full-suite
     // artifact: each query's sentinel-normalized time (value / its own
     // micro-ratio — the matched-moment comparison) vs the same field in
-    // the last BENCH_SELF.json. >2x slower AND >0.5 s absolute flags a
+    // the last BENCH_SELF_c<cpus>.json. >2x slower AND >0.5 s absolute flags a
     // regression; the absolute floor keeps sub-second queries' fixed
     // scheduling jitter out of the list. Cross-run host-phase noise is
     // already divided out by the per-sample sentinels, so survivors are
@@ -168,14 +168,16 @@ object Bench {
           .map(g => g.group(1) -> g.group(2).toDouble).toMap
         case None => Map.empty[String, Double]
       })
+    // The artifact is keyed by core count: the suite's per-query times
+    // move with cpus, so a run compares only against the same cpus and sf.
+    val selfFile = java.nio.file.Paths.get(s"BENCH_SELF_c$cpus.json")
     val regressions: Seq[(String, Double, Double)] =
       if (args.nonEmpty) Nil // subset probes have no comparable artifact
       else scala.util.Try {
-        val prev = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_SELF.json")),
+        val prev = new String(java.nio.file.Files.readAllBytes(selfFile),
           java.nio.charset.StandardCharsets.UTF_8)
-        // cross-SF comparisons are meaningless — only diff same-SF runs
-        require(prev.contains(s""""sf":"$sfDir""""))
+        // cross-SF or cross-cpus comparisons are meaningless
+        require(prev.contains(s""""sf":"$sfDir"""") && prev.contains(s""""cpus":$cpus,"""))
         val prevQ = parseMap(prev, "queries")
         val prevS = parseMap(prev, "query_sentinels")
         results.flatMap { case (name, (v, r)) =>
@@ -205,8 +207,7 @@ object Bench {
     // survive regardless of how stdout is captured. Subset runs are ad-hoc
     // timing probes and must not clobber the full-suite artifact.
     try {
-      if (args.isEmpty) java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_SELF.json"),
+      if (args.isEmpty) java.nio.file.Files.write(selfFile,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
     // Per-query results ALSO as one bounded JSON line per query: a
@@ -224,8 +225,8 @@ object Bench {
     // at 300+ queries, so ALSO print a short headline-only summary LAST:
     // a tail capture that parses its final line gets the graded fields
     // (total/normalized/degraded/failures) even when the full line is
-    // head-truncated; the per-query map lives in BENCH_SELF.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":$normalized,"degraded":$degraded,"sentinel_ratio":$sentinelRatio,"sentinel_ratio_all":$sentinelRatioAll,"cpus":$cpus,"n_queries":${order.size},"failures":$failedJson,"regressions":$regJson,"queries_file":"BENCH_SELF.json","sf":"$sfDir"}""")
+    // head-truncated; the per-query map lives in BENCH_SELF_c<cpus>.json.
+    println(s"""{"metric":"total","value":$total,"unit":"sec","value_normalized":$normalized,"degraded":$degraded,"sentinel_ratio":$sentinelRatio,"sentinel_ratio_all":$sentinelRatioAll,"cpus":$cpus,"n_queries":${order.size},"failures":$failedJson,"regressions":$regJson,"queries_file":"$selfFile","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,15 +1,20 @@
 package graft
 
-// Throwaway local diagnostic — NEVER committed. Counts Spark jobs
-// submitted while running a named query (after one warmup run).
+/** Dev profiler: counts the Spark jobs submitted while running each named
+  * query once, after one warm-up run.
+  *
+  * Usage: runMain graft.JobCount <sfDir> <queryName>...
+  * (cores: `SPARK_GRAFT_CPUS`, default 4)
+  */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkEntry.configure(
       org.apache.spark.sql.SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -6,15 +6,17 @@ import org.apache.spark.sql.SparkSession
   * (first run = plan+codegen+JIT, later runs = steady state).
   *
   * Usage: runMain graft.Probe <sfDir> <nRuns> <queryName>...
+  * (cores: `SPARK_GRAFT_CPUS`, default 4)
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nRuns = args.lift(1).map(_.toInt).getOrElse(3)
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkEntry.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Pins the replay-guard contract of [[Util.batchAlreadyApplied]]
+/** Pins the contracts of the shared helpers: the schema memo of
+  * [[Util.readParquet]] (a new file version or inference setting infers
+  * again; a warm read starts no job; reads stay distinct relations), and
+  * the replay-guard contract of [[Util.batchAlreadyApplied]]
   * (round-11 ADVICE fix): only the empty-debris/schema-inference
   * failure may read as "not applied" — any other read failure must
   * rethrow, because answering "not applied" on a transient error would
@@ -96,5 +100,160 @@ class UtilSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** A fresh parquet file path under a new temp dir. */
+  private def tmpParquet(prefix: String): String = s"${tmpDir(prefix)}/t.parquet"
+
+  /** Writes `df` as ONE parquet file at `path` (replacing any file there),
+    * the single-file layout of the query tables.
+    */
+  private def writeSingle(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val out = tmpDir("single_out")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("readParquet: the memoized schema equals the inferred one for every test table") {
+    val testdata = new java.io.File(sf).getParent
+    for (sfDir <- Seq("sf0.001", "sf0.01", "sf0.1").map(d => s"$testdata/$d")) {
+      val files = new java.io.File(sfDir).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty, sfDir)
+      for (f <- files.sorted) {
+        Util.readParquet(spark, f) // cold (or already warm from another suite)
+        assert(Util.readParquet(spark, f).schema === spark.read.parquet(f).schema, f)
+      }
+    }
+  }
+
+  test("readParquet: a file rewritten at the same path is read with its new schema") {
+    import spark.implicits._
+    val path = tmpParquet("rewrite")
+    writeSingle(Seq(1L, 2L).toDF("a"), path)
+    assert(Util.readParquet(spark, path).schema.fieldNames.toSeq === Seq("a"))
+    assert(Util.readParquet(spark, path).schema.fieldNames.toSeq === Seq("a"))
+    writeSingle(Seq(("x", 1, 2.0)).toDF("b", "c", "d"), path)
+    val again = Util.readParquet(spark, path)
+    assert(again.schema === spark.read.parquet(path).schema)
+    assert(again.schema.fieldNames.toSeq === Seq("b", "c", "d"))
+    assert(again.as[(String, Int, Double)].collect().toSeq === Seq(("x", 1, 2.0)))
+    // a directory rewritten by Spark: new part files, new schema
+    val dir = tmpDir("rewrite_dir") + "/d"
+    Seq(1L).toDF("a").write.parquet(dir)
+    assert(Util.readParquet(spark, dir).schema.fieldNames.toSeq === Seq("a"))
+    Seq("y").toDF("z").write.mode("overwrite").parquet(dir)
+    assert(Util.readParquet(spark, dir).schema.fieldNames.toSeq === Seq("z"))
+  }
+
+  test("readParquet: each inference setting gets its own inferred schema, and the conf is restored") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // written by parquet itself: a Spark-written file carries its Spark
+    // schema, which inference prefers over these settings
+    def writeOne(field: String)(fill: org.apache.parquet.example.data.Group => Unit): String = {
+      val path = tmpParquet("inference")
+      val schema = MessageTypeParser.parseMessageType(s"message m { required $field; }")
+      val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+        .withConf(spark.sparkContext.hadoopConfiguration).withType(schema).build()
+      val g = new SimpleGroupFactory(schema).newGroup()
+      fill(g)
+      try w.write(g) finally w.close()
+      path
+    }
+    val nanos = writeOne("int64 ts (TIMESTAMP(NANOS,true))")(_.append("ts", 1234L))
+    val binary = writeOne("binary b")(_.append("b", "hi"))
+
+    /** The read's schema, or the class of its failure. */
+    def outcome(read: => org.apache.spark.sql.DataFrame): Either[String, StructType] =
+      scala.util.Try(read.schema).toEither.left.map(_.getClass.getName)
+    def check(key: String, path: String, values: Seq[String]): Seq[Either[String, StructType]] = {
+      val saved = spark.conf.getAll.get(key)
+      val got = try values.map { v =>
+        spark.conf.set(key, v)
+        outcome(Util.readParquet(spark, path)) // memoize under this setting
+        val o = outcome(Util.readParquet(spark, path))
+        assert(o === outcome(spark.read.parquet(path)), s"$key=$v")
+        o
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(spark.conf.getAll.get(key) === saved, s"$key not restored")
+      got
+    }
+    val ns = check("spark.sql.legacy.parquet.nanosAsLong", nanos, Seq("true", "false", "true"))
+    assert(ns.head === Right(StructType(Seq(StructField("ts", LongType)))))
+    assert(ns(1) !== ns.head, "nanosAsLong=false must not be served the nanosAsLong=true schema")
+    assert(ns(2) === ns.head)
+    val bs = check("spark.sql.parquet.binaryAsString", binary, Seq("false", "true"))
+    assert(bs === Seq(Right(StructType(Seq(StructField("b", BinaryType)))),
+      Right(StructType(Seq(StructField("b", StringType))))))
+  }
+
+  test("readParquet: a cold read starts one Spark job, a warm read none") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val path = tmpParquet("jobs")
+    writeSingle(Seq((1L, "a")).toDF("k", "v"), path)
+    val Phase = "graft.test.readParquet.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Phase, "cold")
+      Util.readParquet(spark, path)
+      sc.setLocalProperty(Phase, "warm")
+      Util.readParquet(spark, path)
+      Util.readParquet(spark, path).select("v")
+      // the bus delivers in order: once the marker job is seen, every
+      // earlier job start has been delivered too
+      sc.setLocalProperty(Phase, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq
+      assert(seen.count(_ == "marker") === 1)
+      assert(seen.count(_ == "cold") === 1, seen)
+      assert(seen.count(_ == "warm") === 0, seen)
+    } finally {
+      sc.setLocalProperty(Phase, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("readParquet: concurrent cold reads of one path all get the right schema") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val path = tmpParquet("concurrent")
+    writeSingle(Seq((1L, "a", 2.5)).toDF("k", "v", "w"), path)
+    val expected = spark.read.parquet(path).schema
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val reads = (1 to 8).map(_ => Future { start.await(); Util.readParquet(spark, path).schema })
+      start.countDown()
+      reads.map(Await.result(_, 120.seconds)).foreach(s => assert(s === expected))
+    } finally pool.shutdown()
+    assert(Util.readParquet(spark, path).schema === expected)
+  }
+
+  test("readParquet: a self-join of two table reads resolves and returns the plain read's rows") {
+    def selfJoin(read: () => org.apache.spark.sql.DataFrame) = {
+      val (a, b) = (read(), read())
+      a.join(b, a("n_regionkey") === b("n_regionkey") && a("n_nationkey") < b("n_nationkey"))
+        .select(a("n_name"), b("n_name"))
+        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    }
+    Util.table(spark, sf, "nation") // warm the memo
+    val got = selfJoin(() => Util.table(spark, sf, "nation"))
+    assert(got.nonEmpty)
+    assert(got === selfJoin(() => spark.read.parquet(s"$sf/nation.parquet")))
   }
 }

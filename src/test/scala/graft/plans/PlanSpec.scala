@@ -1125,4 +1125,24 @@ class PlanSpec extends SparkSpec {
       "minhash must never be computed over the corpus docs store — the " +
         s"stored bands are the corpus signature; offenders:\n${offenders(plan).mkString("\n")}")
   }
+
+  test("schema memo: the sampled queries plan exactly as with plain parquet reads") {
+    // the query-mix sample of the benchmark, at its scale factor
+    val names = scala.io.Source.fromFile("perfbench/query_sample.txt").getLines()
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+    assert(names.size === 8)
+    val sfDir = s"${new java.io.File(sf).getParent}/sf0.01"
+    def plan(name: String): String = graft.SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(FormattedMode)
+      .replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+    for (name <- names) {
+      // an empty memo makes each table's first read in the build the plain
+      // `spark.read.parquet`; the second build serves every read from the memo
+      graft.Util.schemaMemo.clear()
+      val plain = plan(name)
+      assert(!graft.Util.schemaMemo.isEmpty, s"$name read no table through the memo")
+      assert(plan(name) === plain, name)
+    }
+  }
 }
