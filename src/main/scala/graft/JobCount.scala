@@ -10,7 +10,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(
       org.apache.spark.sql.SparkSession.builder()
         .master(s"local[$cpus]")

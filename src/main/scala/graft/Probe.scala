@@ -13,7 +13,7 @@ object Probe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nRuns = args.lift(1).map(_.toInt).getOrElse(3)
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -31,6 +31,9 @@ object SparkEntry {
     // few hundred MB against the 128 GiB heap.
     .config("spark.sql.codegen.cache.maxEntries", "25000")
 
+  /** Cores of a main's `local[n]` session: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q04JoinMultiway(spark, "/root/testdata/sf0.001")

@@ -142,32 +142,40 @@ object Util {
   /** Exact sum of a derived value on a 1e-6 grid (e.g. price*(1-disc)). */
   def dsum6(c: Column): Column = sum(c.cast(DecimalType(24, 6))).cast("double")
 
-  /** Replay guard for batch_id-tagged idempotent append state: true iff
-    * `path` already holds a COMMITTED row for `batchId`. A path that
-    * exists but holds no readable parquet data (the debris of a write
-    * that died before its first commit) reads as "not applied" instead
-    * of throwing — the bare `spark.read.parquet` would otherwise fail
-    * on every retry and permanently wedge the foreachBatch stream that
-    * owns the state. ONLY that schema-inference/empty-dir
-    * AnalysisException is swallowed: any other read failure (transient
-    * IO, a corrupt file alongside committed data) rethrows and fails
-    * the batch, because answering "not applied" there would re-append
-    * rows that may already be committed and double-count every
-    * sum-merged table downstream.
+  /** Replay guard for batch_id-tagged append state: true iff `path`
+    * already holds a COMMITTED row for `batchId`. Only `batch_id` is
+    * read, under a declared schema, so the probe runs no schema-inference
+    * job. A missing path reads as "not applied", and so does the debris
+    * of a write that died before its first commit (an empty directory,
+    * or one holding only `_temporary`): it lists no data file, so the
+    * read is empty. Any
+    * read failure (transient IO, a corrupt file alongside committed
+    * data) throws and fails the batch, because answering "not applied"
+    * there would re-append rows that may already be committed and
+    * double-count every sum-merged table downstream. Every writer of a
+    * probed path tags `batch_id` as a long.
     */
-  def batchAlreadyApplied(spark: SparkSession, path: String,
+  private[graft] def batchAlreadyApplied(spark: SparkSession, path: String,
       batchId: Long): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && (try {
-      !spark.read.parquet(path).filter(col("batch_id") === batchId).isEmpty
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getErrorClass != null &&
-            (e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA") ||
-              e.getErrorClass.contains("PATH_NOT_FOUND")) => false
-    })
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p) &&
+      !spark.read.schema("batch_id BIGINT").parquet(path)
+        .filter(col("batch_id") === batchId).isEmpty
   }
+
+  /** The replay protocol of every batch_id-tagged streaming state table:
+    * append `rows`, tagged `batch_id = batchId`, to the parquet table at
+    * `path` unless [[batchAlreadyApplied]] finds the batch committed
+    * there. An at-least-once source re-delivers a failed batch under the
+    * same id, and the replay appends nothing. `rows` is by-name, so a
+    * replay never builds it; a `batch_id` column it already has is
+    * replaced. Correct under Structured Streaming's serialized
+    * micro-batch execution.
+    */
+  def appendOnce(spark: SparkSession, path: String, batchId: Long)(
+      rows: => DataFrame): Unit =
+    if (!batchAlreadyApplied(spark, path, batchId))
+      rows.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(path)
 
   /** TIMESTAMP_NTZ literal (the testdata date columns are NTZ). */
   def ldt(s: String): Column = lit(java.time.LocalDateTime.parse(s))

@@ -20,7 +20,7 @@ object Verify {
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

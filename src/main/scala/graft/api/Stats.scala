@@ -60,10 +60,8 @@ object Stats {
   def appendBatchStatsIdempotent(batch: DataFrame, path: String,
       keyCols: Seq[String], valueCol: String, distinctCol: String,
       batchId: Long, lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended)
-      appendBatchStats(batch, path, keyCols, valueCol, distinctCol, batchId, lgK)
+    appendOnce(batch.sparkSession, path, batchId)(
+      batchStats(batch, keyCols, valueCol, distinctCol, batchId, lgK))
   }
 
   /** Corpus-wide summary from the stats table alone: exact merged
@@ -145,12 +143,8 @@ object Stats {
   def appendCmsBatchIdempotent(batch: DataFrame, path: String,
       keyCol: String, batchId: Long, depth: Int = 4,
       width: Int = 2048): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended)
-      cmsBuild(batch, keyCol, depth, width)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
+    appendOnce(batch.sparkSession, path, batchId)(
+      cmsBuild(batch, keyCol, depth, width))
   }
 
   /** The corpus-wide sketch from the persisted table alone: counter-wise
@@ -210,16 +204,13 @@ object Stats {
       binsPath: String, keyCol: String, valueCol: String, batchId: Long,
       bins: Int = 10): Unit = {
     val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, binsPath, batchId)
-    if (!alreadyAppended) {
+    appendOnce(spark, binsPath, batchId) {
       val edges = spark.read.parquet(refPath)
         .select(col(keyCol), col("lo"), col("hi")).distinct()
       batch.select(col(keyCol), col(valueCol).cast("double").as("v"))
         .join(broadcast(edges), keyCol)
         .withColumn("bin", binOf(col("v"), col("lo"), col("hi"), bins))
         .groupBy(col(keyCol), col("bin")).agg(count(lit(1)).as("cur_n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(binsPath)
     }
   }
 
@@ -312,13 +303,9 @@ object Stats {
     */
   def appendCatBatchIdempotent(batch: DataFrame, countsPath: String,
       keyCol: String, catCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, countsPath, batchId)
-    if (!alreadyAppended)
+    appendOnce(batch.sparkSession, countsPath, batchId)(
       batch.groupBy(col(keyCol), col(catCol).as("cat"))
-        .agg(count(lit(1)).as("cur_n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(countsPath)
+        .agg(count(lit(1)).as("cur_n")))
   }
 
   /** Jensen–Shannon divergence per key over everything ingested so far:
@@ -367,14 +354,9 @@ object Stats {
     */
   def appendDailyCountsIdempotent(batch: DataFrame, countsPath: String,
       keyCol: String, dayCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, countsPath, batchId)
-    if (!alreadyAppended) {
+    appendOnce(batch.sparkSession, countsPath, batchId)(
       batch.groupBy(col(keyCol).as("k"), col(dayCol).cast("long").as("day"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(countsPath)
-    }
+        .agg(count(lit(1)).as("c")))
   }
 
   /** EWMA trend over everything ingested so far: merges the per-batch
@@ -407,14 +389,9 @@ object Stats {
     */
   def appendFirstSeenIdempotent(batch: DataFrame, path: String,
       keyCol: String, dayCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended) {
+    appendOnce(batch.sparkSession, path, batchId)(
       batch.groupBy(col(keyCol).as("k"))
-        .agg(min(col(dayCol).cast("long")).as("first_day"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
-    }
+        .agg(min(col(dayCol).cast("long")).as("first_day")))
   }
 
   /** Growth curve over everything ingested so far — new keys per

@@ -5587,14 +5587,8 @@ object EventOps {
     */
   def appendDailyMaxIdempotent(batch: DataFrame, path: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended) {
-      batch.groupBy(col("event_type"), col("day"))
-        .agg(max(col("v_e2")).as("mx"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
-    }
+    appendOnce(batch.sparkSession, path, batchId)(
+      batch.groupBy(col("event_type"), col("day")).agg(max(col("v_e2")).as("mx")))
   }
 
   /** Read side of the live extremes monitor: MAX-merge the per-batch

@@ -302,13 +302,7 @@ object ModelOps {
     */
   def appendCalibrationBatchIdempotent(batch: DataFrame, path: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended) {
-      calibrationBins(batch)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
-    }
+    appendOnce(batch.sparkSession, path, batchId)(calibrationBins(batch))
   }
 
   /** Read side of the live calibration monitor: sum-merge the per-batch

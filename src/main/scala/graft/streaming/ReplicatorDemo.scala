@@ -15,9 +15,10 @@ object ReplicatorDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("replicator-demo").toString)
+    val cpus = SparkEntry.cpus
     val spark = SparkEntry.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

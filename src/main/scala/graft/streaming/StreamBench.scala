@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val nRecords = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     val outDir = java.nio.file.Files.createTempDirectory("streambench").toString
     val spark = SparkEntry.configure(SparkSession.builder()
       .master(s"local[$cpus]")

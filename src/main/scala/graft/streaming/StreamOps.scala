@@ -367,9 +367,7 @@ object StreamOps {
     */
   def cdcDiffIngestBatch(batch: DataFrame, batchId: Long, path: String,
       t1Nanos: Long): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended) {
+    graft.Util.appendOnce(batch.sparkSession, path, batchId) {
       val key = concat(
         lpad(expr("ts div 1000").cast("string"), 20, "0"),
         lpad(col("event_id").cast("string"), 20, "0"))
@@ -383,8 +381,6 @@ object StreamOps {
           max_by(col("cents"), key).as("c2"),
           sum(when(col("ts") < t1Nanos, 1L).otherwise(0L)).as("n_pre"),
           sum(when(col("ts") >= t1Nanos, 1L).otherwise(0L)).as("n_post"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
     }
   }
 
@@ -427,13 +423,8 @@ object StreamOps {
     */
   def reconcileIngestBatch(batch: DataFrame, batchId: Long,
       path: String): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended) {
-      graft.operators.EventOps.reconcilePartials(batch)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
-    }
+    graft.Util.appendOnce(batch.sparkSession, path, batchId)(
+      graft.operators.EventOps.reconcilePartials(batch))
   }
 
   /** Read side of the live reconciliation monitor: SUM-merge the
@@ -488,13 +479,8 @@ object StreamOps {
     */
   def kAnonymityIngestBatch(batch: DataFrame, batchId: Long,
       countsPath: String, qiCols: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, countsPath, batchId)
-    if (!alreadyAppended)
-      batch.groupBy(qiCols.map(col): _*)
-        .agg(count(lit(1)).as("cur_n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(countsPath)
+    graft.Util.appendOnce(batch.sparkSession, countsPath, batchId)(
+      batch.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("cur_n")))
   }
 
   /** Read side of the live k-anonymity monitor: merge the per-batch
@@ -536,13 +522,9 @@ object StreamOps {
     */
   def stratifiedSampleIngestBatch(batch: DataFrame, batchId: Long,
       path: String, strataCol: String, idCol: String, k: Int): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended)
+    graft.Util.appendOnce(batch.sparkSession, path, batchId)(
       graft.api.Sampling.stratifiedSample(batch, strataCol, idCol, k)
-        .drop("sample_rank")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
+        .drop("sample_rank"))
   }
 
   /** Read side of the live sample: merge the per-batch bottom-k
@@ -583,15 +565,11 @@ object StreamOps {
     */
   def conformalIngestBatch(batch: DataFrame, batchId: Long, path: String,
       groupCol: String, idCol: String, residualCol: String, k: Int): Unit = {
-    val spark = batch.sparkSession
-    val alreadyAppended = graft.Util.batchAlreadyApplied(spark, path, batchId)
-    if (!alreadyAppended)
+    graft.Util.appendOnce(batch.sparkSession, path, batchId)(
       graft.api.Sampling.stratifiedSample(
           batch.select(col(groupCol), col(idCol), col(residualCol)),
           groupCol, idCol, k)
-        .drop("sample_rank", "u", "priority")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(path)
+        .drop("sample_rank", "u", "priority"))
   }
 
   /** Read side of the live calibration: merge the candidates back
@@ -657,9 +635,8 @@ object StreamOps {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marksPath = s"$path/marks"
     val aggPath = s"$path/agg"
+    if (graft.Util.batchAlreadyApplied(spark, marksPath, batchId)) return
     val hasState = fs.exists(new org.apache.hadoop.fs.Path(marksPath))
-    if (hasState && !spark.read.parquet(marksPath)
-        .filter(col("batch_id") === batchId).isEmpty) return
     val marks =
       if (hasState) spark.read.parquet(marksPath)
         .select($"event_type", $"max_ts")
@@ -1369,11 +1346,8 @@ object StreamOps {
     val admitted = graft.api.Similarity.semanticDedupAgainstIvfIndex(
       spark, indexPath, batch, idCol, embCol, threshold).localCheckpoint()
     val logPath = s"$indexPath/ingest_log"
-    val replayed =
-      try spark.read.parquet(logPath)
-        .filter(col("batch_id") === batchId).limit(1).count() > 0
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!replayed && !admitted.isEmpty) {
+    if (!graft.Util.batchAlreadyApplied(spark, logPath, batchId) &&
+        !admitted.isEmpty) {
       graft.api.Similarity.appendToIvfIndex(
         admitted.drop("cluster", "norm"), idCol, embCol, indexPath)
       import spark.implicits._

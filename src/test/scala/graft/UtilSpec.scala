@@ -6,12 +6,12 @@ import org.apache.spark.sql.types._
 /** Pins the contracts of the shared helpers: the schema memo of
   * [[Util.readParquet]] (a new file version or inference setting infers
   * again; a warm read starts no job; reads stay distinct relations), and
-  * the replay-guard contract of [[Util.batchAlreadyApplied]]
-  * (round-11 ADVICE fix): only the empty-debris/schema-inference
-  * failure may read as "not applied" — any other read failure must
-  * rethrow, because answering "not applied" on a transient error would
-  * re-append a possibly-committed batch and double-count every
-  * sum-merged idempotent table downstream.
+  * the replay guard of [[Util.appendOnce]] and
+  * [[Util.batchAlreadyApplied]]: a missing path or empty debris reads as
+  * "not applied", and any read failure must rethrow, because answering
+  * "not applied" on a transient error would re-append a
+  * possibly-committed batch and double-count every sum-merged
+  * idempotent table downstream.
   */
 class UtilSpec extends SparkSpec {
 
@@ -47,6 +47,85 @@ class UtilSpec extends SparkSpec {
         // rethrow is the strict (and expected) behavior: the batch
         // fails and retries instead of double-appending
         ()
+    }
+  }
+
+  /** Rows of `path` tagged with `batchId`. */
+  private def batchRows(path: String, batchId: Long): Long =
+    spark.read.parquet(path).filter(col("batch_id") === batchId).count()
+
+  test("appendOnce: a replayed batch appends once, and other batches still append") {
+    import spark.implicits._
+    val path = s"${tmpDir("append_once")}/state"
+    def append(b: Long): Unit =
+      Util.appendOnce(spark, path, b)(Seq(("x", 1L), ("y", 2L)).toDF("k", "n"))
+    append(1L)
+    append(1L)
+    append(2L)
+    append(2L)
+    assert(batchRows(path, 1L) === 2)
+    assert(batchRows(path, 2L) === 2)
+    assert(spark.read.parquet(path).count() === 4)
+    assert(spark.read.parquet(path).schema("batch_id").dataType === LongType)
+  }
+
+  test("appendOnce: a replay neither writes nor builds its frame") {
+    import spark.implicits._
+    val path = s"${tmpDir("append_once_replay")}/state"
+    Util.appendOnce(spark, path, 7L)(Seq(("x", 1L)).toDF("k", "n"))
+    def files = new java.io.File(path).list().toSet
+    val before = files
+    Util.appendOnce(spark, path, 7L)(
+      throw new IllegalStateException("a replay must not build its frame"))
+    assert(files === before)
+    assert(batchRows(path, 7L) === 1)
+  }
+
+  test("appendOnce: an empty directory and a _temporary-only directory both get the append") {
+    import spark.implicits._
+    val dir = tmpDir("append_once_debris")
+    new java.io.File(s"$dir/empty").mkdirs()
+    // the debris of a write that died before its task commit: an attempt
+    // file of the SAME batch under _temporary, which readers never list
+    Seq(("x", 1L)).toDF("k", "n").withColumn("batch_id", lit(3L))
+      .coalesce(1).write.parquet(s"$dir/aborted/_temporary/0/_temporary/attempt_0")
+    for (d <- Seq("empty", "aborted")) {
+      Util.appendOnce(spark, s"$dir/$d", 3L)(Seq(("y", 2L)).toDF("k", "n"))
+      assert(batchRows(s"$dir/$d", 3L) === 1, d)
+      assert(spark.read.parquet(s"$dir/$d").select("k").as[String].collect().toSeq === Seq("y"), d)
+    }
+  }
+
+  test("batchAlreadyApplied: a probe of a committed path starts one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val path = s"${tmpDir("probe_jobs")}/state"
+    Seq(("x", 5L)).toDF("v", "batch_id").coalesce(1).write.parquet(path)
+    val Phase = "graft.test.batchAlreadyApplied.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Phase, "probe")
+      assert(Util.batchAlreadyApplied(spark, path, 5L))
+      // the bus delivers in order: once the marker job is seen, every
+      // earlier job start has been delivered too
+      sc.setLocalProperty(Phase, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      val seen = jobs.asScala.toSeq
+      assert(seen.count(_ == "marker") === 1)
+      // no schema-inference job: only the keyed read itself
+      assert(seen.count(_ == "probe") === 1, seen)
+    } finally {
+      sc.setLocalProperty(Phase, null)
+      sc.removeSparkListener(listener)
     }
   }
 
