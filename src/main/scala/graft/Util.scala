@@ -174,50 +174,80 @@ object Util {
     */
   def appendOnce(spark: SparkSession, path: String, batchId: Long)(
       rows: => DataFrame): Unit =
-    if (!batchAlreadyApplied(spark, path, batchId))
+    if (!batchAlreadyApplied(spark, path, batchId)) {
+      clearUncommitted(spark, path)
       rows.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(path)
+    }
+
+  /** Deletes `path`/_temporary. A driver that dies after some of a
+    * write's tasks committed, but before the job committed, leaves their
+    * files there, and the next append's job commit would promote them
+    * beside its own rows. Call between a "not applied" probe and the
+    * append: micro-batches are serialized, so no live write owns it.
+    */
+  private[graft] def clearUncommitted(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path, "_temporary")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
 
   /** TIMESTAMP_NTZ literal (the testdata date columns are NTZ). */
   def ldt(s: String): Column = lit(java.time.LocalDateTime.parse(s))
 
   /** Eagerly build a Bloom filter over a LONG hash expression of `df`,
     * returning the serialized filter bytes (null when `df` is empty).
-    * Eager — not an inline aggregate subquery — for the reason
-    * [[graft.api.Dedup]]'s gate documents: Spark re-validates the
-    * bloom-aggregate size clamps (`runtime.bloomFilter.maxNumItems/
-    * maxNumBits`) in CheckAnalysis on EVERY later Dataset composition,
-    * so an embedded `bloom_filter_agg` would pin raised confs for the
-    * frame's whole lifetime. Here the clamps are raised only around the
-    * one-job build and restored before returning.
+    * Eager, not an inline aggregate subquery: Spark re-validates the
+    * bloom-aggregate size clamps in CheckAnalysis on EVERY later Dataset
+    * composition, so an embedded `bloom_filter_agg` would pin raised
+    * confs for the frame's whole lifetime. Here the one-job build runs
+    * inside [[withBloomClamps]], and a caller embeds the bytes as a
+    * one-row `Dataset.scalar()` ([[graft.functions.BloomFunctions.mightContain]]).
     */
   def bloomBytes(df: DataFrame, hashExpr: String, items: Long,
       bits: Long): Array[Byte] = {
     val sess = df.sparkSession
     graft.functions.BloomFunctions.register(sess)
-    val ItemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val BitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    withBloomClamps(sess, items, bits) {
+      df.select(expr(s"bloom_filter_agg($hashExpr, ${items}L, ${bits}L)"))
+        .head().getAs[Array[Byte]](0)
+    }
+  }
+
+  /** Runs `body` with the session's Bloom aggregate size clamps
+    * (`spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits`,
+    * 4M items / 64M bits by default) raised to at least `items`/`bits`:
+    * below them Spark silently saturates a `bloom_filter_agg` sized for a
+    * larger set. A raised key is restored to its explicit prior setting,
+    * or unset when it had none, even when `body` throws. Scopes are
+    * serialized, so a concurrent scope can neither see another's raise
+    * nor restore under it.
+    */
+  private[graft] def withBloomClamps[T](spark: SparkSession, items: Long, bits: Long)(
+      body: => T): T = BloomClampLock.synchronized {
     /** Raises `key` to `v` if its effective value is below it; returns
       * the key's explicit session setting (None when unset) iff raised.
       */
     def raise(key: String, v: Long): Option[Option[String]] = {
-      val explicit = sess.conf.getAll.get(key)
-      val cur = try sess.conf.getOption(key) catch { case _: Throwable => None }
-      if (v > cur.map(_.toLong).getOrElse(0L)) { sess.conf.set(key, v.toString); Some(explicit) }
+      val explicit = spark.conf.getAll.get(key)
+      val cur = try spark.conf.getOption(key) catch { case _: Throwable => None }
+      if (v > cur.map(_.toLong).getOrElse(0L)) { spark.conf.set(key, v.toString); Some(explicit) }
       else None
     }
     def restore(key: String, prior: Option[Option[String]]): Unit = prior.foreach {
-      case Some(v) => sess.conf.set(key, v)
-      case None => sess.conf.unset(key)
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
+    val ItemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
+    val BitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val priorItems = raise(ItemsKey, items)
     val priorBits = raise(BitsKey, bits)
-    try df.select(expr(s"bloom_filter_agg($hashExpr, ${items}L, ${bits}L)"))
-      .head().getAs[Array[Byte]](0)
+    try body
     finally {
       restore(ItemsKey, priorItems)
       restore(BitsKey, priorBits)
     }
   }
+  private object BloomClampLock
 
   /** Bounded driver-side fan-out pools for overlapping independent Spark
     * jobs (guide §2.6: 2-3 jobs in flight fills the scheduler tail;

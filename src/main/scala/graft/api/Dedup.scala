@@ -426,62 +426,32 @@ object Dedup {
       .localCheckpoint()
 
   /** The Bloom pre-gate predicate. The benchmark's `bloom_filter_agg`
-    * runs EAGERLY here (one narrow aggregate over the already
-    * materialized shingle frame) and the resulting filter bytes feed the
-    * corpus-side `might_contain` probe through a one-row local relation
-    * read by a scalar subquery — the broadcast-of-bits shape, with the
-    * build paid once at construction instead of once per query run.
+    * runs EAGERLY here ([[graft.Util.bloomBytes]]: one narrow aggregate
+    * over the already materialized shingle frame) and the resulting
+    * filter bytes feed the corpus-side `might_contain` probe as a one-row
+    * scalar subquery — the broadcast-of-bits shape, with the build paid
+    * once at construction instead of once per query run.
     *
     * Why eager instead of an inline aggregate subquery: Spark clamps
-    * Bloom aggregates at
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits`
-    * (4M items / 8 MB by default) — silently saturating the filter for
-    * the very suites this gate exists for — and the clamp re-validates
-    * in `CheckAnalysis` on EVERY later Dataset composition, so a plan
-    * that embeds the aggregate forces the raised confs to stay raised
-    * for the frame's whole lifetime (the r6 session-conf leak). With
-    * the aggregate executed up front, the confs are raised only around
-    * the build and restored before returning; the returned frame holds
-    * no `bloom_filter_agg` for later analysis passes to re-clamp. The
-    * temp view backing the subquery drops immediately (analysis is
-    * eager; the resolved local relation stays embedded in the plan).
+    * Bloom aggregates at its runtime Bloom-filter size limits (4M items
+    * / 8 MB by default, [[graft.Util.withBloomClamps]]) — silently
+    * saturating the filter for the very suites this gate exists for —
+    * and the clamp re-validates in `CheckAnalysis` on EVERY later
+    * Dataset composition, so a plan that embeds the aggregate forces the
+    * raised confs to stay raised for the frame's whole lifetime (the r6
+    * session-conf leak). With the aggregate executed up front, the confs
+    * are raised only around the build; the returned frame holds no
+    * `bloom_filter_agg` for later analysis passes to re-clamp.
     */
   private def bloomGated(corpusSh: DataFrame, benchSh: DataFrame,
       items: Long, bits: Long): DataFrame = {
-    val sess = benchSh.sparkSession
-    graft.functions.BloomFunctions.register(sess)
-    val ItemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val BitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    def raise(key: String, v: Long): Option[String] = {
-      val cur = try sess.conf.getOption(key) catch { case _: Throwable => None }
-      if (v > cur.map(_.toLong).getOrElse(0L)) { sess.conf.set(key, v.toString); cur }
-      else None // unchanged — nothing to restore
-    }
-    val priorItems = raise(ItemsKey, items)
-    val priorBits = raise(BitsKey, bits)
-    val filterBytes =
-      try benchSh
-        .select(expr(s"bloom_filter_agg(xxhash64(sh), ${items}L, ${bits}L)").as("bf"))
-        .head().getAs[Array[Byte]](0)
-      finally {
-        priorItems.foreach(sess.conf.set(ItemsKey, _))
-        priorBits.foreach(sess.conf.set(BitsKey, _))
-      }
+    val filterBytes = graft.Util.bloomBytes(benchSh, "xxhash64(sh)", items, bits)
     if (filterBytes == null) {
       // empty benchmark: nothing can be contaminated — same verdict the
       // null-filter probe would return, made explicit
       corpusSh.filter(lit(false))
-    } else {
-      import sess.implicits._
-      val view = s"__graft_bloom_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      Seq(filterBytes).toDF("bf").createOrReplaceTempView(view)
-      // filter() analyzes eagerly — the subquery inlines the view's
-      // resolved one-row relation, so the temp view can drop as soon as
-      // the frame is constructed
-      try corpusSh.filter(expr(
-        s"might_contain((SELECT bf FROM $view), xxhash64(sh))"))
-      finally { sess.catalog.dropTempView(view); () }
-    }
+    } else corpusSh.filter(graft.functions.BloomFunctions.mightContain(
+      benchSh.sparkSession, filterBytes, col("sh")))
   }
 
   /** Suite-size cutover between the two decontamination gate plans:

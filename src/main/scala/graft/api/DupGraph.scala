@@ -443,34 +443,41 @@ object DupGraph {
     // hold for any completion subset of the first three); run them
     // concurrently, then commit docs after every sibling landed
     val fEdges = Future {
-      if (!applied("edges") && !edges.isEmpty)
+      if (!applied("edges") && !edges.isEmpty) {
+        graft.Util.clearUncommitted(spark, edgesGen)
         edges.write.mode("append").partitionBy("jbucket").parquet(edgesGen)
+      }
     }
     // empty-guarded like the edges append: a redelivery-only batch must
     // not append zero-row files on every replay (its batch_id can never
     // commit, so the guard alone would admit the debris forever)
     val fBands = Future {
-      if (!docsEmpty && !applied("bands"))
+      if (!docsEmpty && !applied("bands")) {
+        graft.Util.clearUncommitted(spark, bandsGen)
         Dedup.bandsFrame(newDocs, idCol, textCol, m.shingleN)
           .select(col(idCol).as("id"), col("band"), col("band_sig"),
             lit(batchId).as("batch_id"))
           .write.mode("append").parquet(bandsGen)
+      }
     }
     val fBloom = Future {
       if (!docsEmpty && !applied("bloom")) {
         val (bf, nIds) = bloomRowOf(newDocs, idCol)
         if (bf != null) {
           import spark.implicits._
+          graft.Util.clearUncommitted(spark, bloomGen)
           Seq((bf, nIds, batchId)).toDF("bf", "n_ids", "batch_id")
             .coalesce(1).write.mode("append").parquet(bloomGen)
         }
       }
     }
     Await.result(Future.sequence(Seq(fEdges, fBands, fBloom)), Duration.Inf)
-    if (!docsEmpty && !applied("docs"))
+    if (!docsEmpty && !applied("docs")) {
+      graft.Util.clearUncommitted(spark, docsGen)
       newDocs.select(col(idCol).as("id"), col(textCol).as("text"),
           lit(batchId).as("batch_id"))
         .write.mode("append").parquet(docsGen)
+    }
     edges.select(col("id_a"), col("id_b"), col("n_inter"), col("jaccard"))
   }
 
@@ -510,21 +517,11 @@ object DupGraph {
       case Some(bf) =>
         val bytes = { val o = new java.io.ByteArrayOutputStream()
           bf.writeTo(o); o.toByteArray }
-        graft.functions.BloomFunctions.register(spark)
-        import spark.implicits._
-        val view = "__graft_dupg_bloom_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        Seq(bytes).toDF("bf").createOrReplaceTempView(view)
-        // filter() analyzes eagerly — the subquery inlines the view's
-        // resolved one-row relation, so the view drops right away
-        try {
-          val probe = expr(
-            s"might_contain((SELECT bf FROM $view), xxhash64(`$idCol`))")
-          val definitelyNew = batchRows.filter(!probe)
-          val maybeKnown = batchRows.filter(probe)
-          if (maybeKnown.isEmpty) definitelyNew
-          else definitelyNew.unionByName(antiJoin(maybeKnown))
-        } finally spark.catalog.dropTempView(view)
+        val probe = graft.functions.BloomFunctions.mightContain(spark, bytes, col(idCol))
+        val definitelyNew = batchRows.filter(!probe)
+        val maybeKnown = batchRows.filter(probe)
+        if (maybeKnown.isEmpty) definitelyNew
+        else definitelyNew.unionByName(antiJoin(maybeKnown))
     }
   }
 

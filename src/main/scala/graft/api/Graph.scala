@@ -253,24 +253,17 @@ object Graph {
       // bounds fold over the checkpointed doubled edge list rides the
       // final job as a scalar-subquery filter — always true on valid
       // domains, raise_error otherwise; no join, no per-row work.
-      val sess = out.sparkSession
-      val view = "__graft_lpa_guard_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      und.createOrReplaceTempView(view)
-      // where() analyzes eagerly — the subquery inlines the view's
-      // resolved relation, so the temp view drops right away
-      try out.where(expr(
-        s"""(SELECT CASE WHEN min(src) IS NULL OR
-           |  (min(CAST(src AS BIGINT)) >= 0 AND
-           |   max(CAST(src AS BIGINT)) < 4194304)
-           |  THEN 1
-           |  ELSE raise_error(concat(
-           |    'labelPropagation(packLabels = true) requires 0 <= id < 2^22',
-           |    ' (saw id range [', min(CAST(src AS BIGINT)), ', ',
-           |    max(CAST(src AS BIGINT)),
-           |    ']); pass packLabels = false for wider id domains'))
-           |  END FROM $view) = 1""".stripMargin))
-      finally { sess.catalog.dropTempView(view); () }
+      out.where(und.agg(expr(
+        """CASE WHEN min(src) IS NULL OR
+          |  (min(CAST(src AS BIGINT)) >= 0 AND
+          |   max(CAST(src AS BIGINT)) < 4194304)
+          |  THEN 1
+          |  ELSE raise_error(concat(
+          |    'labelPropagation(packLabels = true) requires 0 <= id < 2^22',
+          |    ' (saw id range [', min(CAST(src AS BIGINT)), ', ',
+          |    max(CAST(src AS BIGINT)),
+          |    ']); pass packLabels = false for wider id domains'))
+          |  END""".stripMargin)).scalar() === 1)
     }
   }
 
@@ -608,39 +601,33 @@ object Graph {
         // the ids that get packed (ids whose every item fell to the
         // degree cap never reach the pack), and its subquery re-read
         // rides the same reused item exchange — rides the final job as a
-        // SCALAR-SUBQUERY filter (the bloomGated pattern): the subquery
-        // executes independently of the pair fold inside the same job,
+        // `Dataset.scalar()` subquery filter: the subquery executes
+        // independently of the pair fold inside the same job,
         // so the guard costs no separate blocking job, no join node
         // (the q280 plan lock forbids nested-loop shapes), and — unlike
         // the earlier per-row assert_true, which measured ~3x slower
         // end-to-end — zero work in the hot dedup/join path. The filter
         // is always true on valid domains; raise_error fires otherwise.
-        val sess = mw.sparkSession
-        val view = "__graft_aa_guard_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        mw.createOrReplaceTempView(view)
-        try joined
+        val guard = mw.agg(expr(
+          """CASE WHEN min(id) IS NULL OR
+            |  (min(CAST(id AS BIGINT)) >= 0 AND
+            |   max(CAST(id AS BIGINT)) < 4194304)
+            |  THEN 1
+            |  ELSE raise_error(concat(
+            |    'adamicAdar(packIds = true) requires 0 <= id < 2^22',
+            |    ' (saw id range [', min(CAST(id AS BIGINT)), ', ',
+            |    max(CAST(id AS BIGINT)),
+            |    ']); pass packIds = false for wider id domains'))
+            |  END""".stripMargin)).scalar()
+        joined
           .select((col("id_a").cast("long") * 4194304L +
             col("id_b").cast("long")).as("pk"), col("w_e6"))
           .groupBy(col("pk"))
           .agg(count(lit(1)).as("n_shared"), sum(col("w_e6")).as("score_e6"))
-          // where() analyzes eagerly — the subquery inlines the view's
-          // resolved relation, so the temp view drops right away
-          .where(expr(
-            s"""(SELECT CASE WHEN min(id) IS NULL OR
-               |  (min(CAST(id AS BIGINT)) >= 0 AND
-               |   max(CAST(id AS BIGINT)) < 4194304)
-               |  THEN 1
-               |  ELSE raise_error(concat(
-               |    'adamicAdar(packIds = true) requires 0 <= id < 2^22',
-               |    ' (saw id range [', min(CAST(id AS BIGINT)), ', ',
-               |    max(CAST(id AS BIGINT)),
-               |    ']); pass packIds = false for wider id domains'))
-               |  END FROM $view) = 1""".stripMargin))
+          .where(guard === 1)
           .select((col("pk") / 4194304L).cast("long").as("id_a"),
             pmod(col("pk"), lit(4194304L)).as("id_b"),
             col("n_shared"), col("score_e6"))
-        finally { sess.catalog.dropTempView(view); () }
       } else joined.groupBy(col("id_a"), col("id_b"))
         .agg(count(lit(1)).as("n_shared"), sum(col("w_e6")).as("score_e6"))
     agg.withColumn("score", col("score_e6").cast("double") / 1e6)

@@ -106,25 +106,13 @@ object Layout {
     graft.functions.BloomFunctions.register(spark)
     df.repartition(numFiles)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
-    val ItemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val BitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    def raise(key: String, v: Long): Option[String] = {
-      val cur = try spark.conf.getOption(key) catch { case _: Throwable => None }
-      if (v > cur.map(_.toLong).getOrElse(0L)) { spark.conf.set(key, v.toString); cur }
-      else None
-    }
-    val priorItems = raise(ItemsKey, items)
-    val priorBits = raise(BitsKey, numBits)
-    try
+    graft.Util.withBloomClamps(spark, items, numBits) {
       spark.read.parquet(s"$path/data")
         .select(col("_metadata.file_path").as("file"), col(keyCol))
         .groupBy(col("file"))
         .agg(expr(s"bloom_filter_agg(xxhash64(`$keyCol`), ${items}L, ${numBits}L)").as("bf"),
           count(lit(1)).as("n_rows"))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/_bloom")
-    finally {
-      priorItems.foreach(spark.conf.set(ItemsKey, _))
-      priorBits.foreach(spark.conf.set(BitsKey, _))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{call_function, xxhash64}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -49,5 +50,15 @@ object BloomFunctions {
       "bloom_filter_agg", buildBloomFilterAgg, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "might_contain", buildMightContain, "scala_udf")
+  }
+
+  /** `might_contain(bytes, xxhash64(cols))`: the serialized filter rides
+    * the plan as a one-row `Dataset.scalar()` subquery, so a probe needs
+    * no catalog entry and no SQL string.
+    */
+  def mightContain(spark: SparkSession, bytes: Array[Byte], cols: Column*): Column = {
+    register(spark)
+    import spark.implicits._
+    call_function("might_contain", Seq(bytes).toDF("bf").scalar(), xxhash64(cols: _*))
   }
 }

@@ -2064,20 +2064,13 @@ object Relational {
       else {
         val bf = graft.Util.bloomBytes(positives, "xxhash64(cust, part)",
           nPos, nPos * 10L)
-        val view = "__graft_q292_bloom_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        Seq(bf).toDF("bf").createOrReplaceTempView(view)
-        // filter() analyzes eagerly — the subquery inlines the view's
-        // resolved one-row relation, so the temp view drops right away
-        try {
-          val probe = expr(
-            s"might_contain((SELECT bf FROM $view), xxhash64(cust, neg_part))")
-          draws.filter(probe)
-            .join(posHit, Seq("cust", "neg_part"), "left")
-            .select($"draw", $"neg_part", $"hit")
-            .unionByName(draws.filter(!probe)
-              .select($"draw", $"neg_part", lit(null).cast("long").as("hit")))
-        } finally { spark.catalog.dropTempView(view); () }
+        val probe = graft.functions.BloomFunctions.mightContain(spark, bf,
+          $"cust", $"neg_part")
+        draws.filter(probe)
+          .join(posHit, Seq("cust", "neg_part"), "left")
+          .select($"draw", $"neg_part", $"hit")
+          .unionByName(draws.filter(!probe)
+            .select($"draw", $"neg_part", lit(null).cast("long").as("hit")))
       }
     // sum_d == |positives| and n_cust == distinct custs: one aggregate
     // over the checkpoint instead of a per-cust groupBy plus a refold

@@ -18,7 +18,7 @@ final case class ObservedBatch(
     lastArrivalMs: Long,
     replicationLagSeconds: Double)
 
-class ObservedMetricsListener(observationName: String = "replicator")
+class ObservedMetricsListener(observationName: String)
     extends StreamingQueryListener {
 
   /** Collected per-batch metrics (thread-safe; listeners fire async). */

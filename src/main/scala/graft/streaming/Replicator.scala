@@ -140,7 +140,9 @@ object Replicator {
     *     in-file ordered by sequence number — op 6),
     *   - checkpoint upserts → `checkpointTableDir` (dynamic partition
     *     overwrite = last-writer-wins per stream — op 7),
-    *   - metrics → `metricsDir` (append, best-effort — ops 8/10).
+    *   - metrics → `metricsDir` (append, best-effort — ops 8/10). A
+    *     batch whose forward write fails writes its rows with
+    *     `successful = 0`, then fails.
     *
     * The gate re-reads `configDir` every micro-batch, so a failover (flip
     * of the activeRegion row, SURVEY §3.2) takes effect on the next batch
@@ -157,8 +159,6 @@ object Replicator {
       streamCheckpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     parse(records)
-      .observe("replicator", count(lit(1)).as("records"),
-        max(col("approximateArrivalTimestamp")).as("lastArrival"))
       .writeStream
       .option("checkpointLocation", streamCheckpointDir)
       .trigger(trigger)
@@ -179,12 +179,20 @@ object Replicator {
     // Op 6: batched forward, shard order restored within each file; the
     // same pass observes the per-stream summary.
     val observed = Observation()
-    batch.filter(col("streamName").isin(active: _*))
+    val forwarded = batch.filter(col("streamName").isin(active: _*))
+    try forwarded
       .sortWithinPartitions(col("streamName"), length(col("sequenceNumber")), col("sequenceNumber"))
       .select("streamName", "partitionKey", "sequenceNumber", "data",
         "approximateArrivalTimestamp", "cdc_key", "commitTimestamp")
       .observe(observed, summaryCol.as("streams"))
       .write.mode("append").partitionBy("streamName").parquet(targetDir)
+    catch { case e: Exception =>
+      // the reference's ReportBatchItemFailures (template.yaml:115-116):
+      // report the batch's records as not forwarded, then fail the batch
+      // so that it is redelivered. Only this path re-reads the batch.
+      writeMetrics(summary(forwarded), lit(0L), metricsDir, batchId)
+      throw e
+    }
     val streams = observed.get("streams").asInstanceOf[Seq[Row]]
     if (streams.isEmpty) return
     val summaries = spark.createDataFrame(streams.asJava,
@@ -196,14 +204,20 @@ object Replicator {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("streamName").parquet(checkpointTableDir)
-    // Ops 8/10: the reference's per-batch metrics (Handler.java:94-98) —
-    // batch size, successes, replication lag vs the latest arrival —
-    // failures swallowed (Handler.java:120-122).
+    writeMetrics(summaries, col("records"), metricsDir, batchId)
+  }
+
+  /** Ops 8/10: the reference's per-batch metrics (Handler.java:94-98) —
+    * batch size, successes, replication lag vs the latest arrival — one
+    * row per [[StreamSummary]], failures swallowed (Handler.java:120-122).
+    */
+  private def writeMetrics(summaries: DataFrame, successful: Column, metricsDir: String,
+      batchId: Long): Unit = {
     val nowMs = System.currentTimeMillis()
     try summaries.select(
         col("streamName"),
         col("records").as("batchSize"),
-        col("records").as("successful"),
+        successful.as("successful"),
         ((lit(nowMs) - unix_millis(timestamp_micros(col("lastArrivalMicros")))) / 1000.0)
           .as("replicationLagSeconds"),
         lit(batchId).as("batchId"))

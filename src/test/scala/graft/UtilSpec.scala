@@ -96,6 +96,25 @@ class UtilSpec extends SparkSpec {
     }
   }
 
+  test("appendOnce: a task committed by a write that died before its job commit is not promoted") {
+    import spark.implicits._
+    val dir = tmpDir("append_once_task")
+    val path = s"$dir/state"
+    Seq(("x", 1L)).toDF("k", "n").withColumn("batch_id", lit(3L)).write.parquet(path)
+    // batch 4's first attempt: one task committed its file into the job
+    // attempt directory, then the driver died before the job commit
+    Seq(("y", 2L)).toDF("k", "n").withColumn("batch_id", lit(4L))
+      .coalesce(1).write.parquet(s"$dir/attempt")
+    val task = new java.io.File(s"$path/_temporary/0/task_0")
+    task.mkdirs()
+    val part = new java.io.File(s"$dir/attempt").listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, new java.io.File(task, part.getName).toPath)
+    assert(!Util.batchAlreadyApplied(spark, path, 4L))
+    Util.appendOnce(spark, path, 4L)(Seq(("y", 2L)).toDF("k", "n"))
+    assert(batchRows(path, 4L) === 1)
+    assert(batchRows(path, 3L) === 1)
+  }
+
   test("batchAlreadyApplied: a probe of a committed path starts one Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
@@ -175,6 +194,36 @@ class UtilSpec extends SparkSpec {
       intercept[Exception](Util.bloomBytes(df, "xxhash64(no_such_column)", items, bits))
       assert(explicit(keys.head) === Some("7"))
       assert(explicit(keys(1)) === None)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("no Bloom clamp scope leaves a clamp key set: decontamination and writeBloomIndexed") {
+    import spark.implicits._
+    val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    def setKeys = keys.filter(spark.conf.getAll.contains)
+    val text = "the quick brown fox jumps over the lazy dog"
+    val corpus = Seq((1L, text), (2L, "nothing in common with any suite")).toDF("k", "body")
+    val suite = Seq((9L, text)).toDF("k", "body")
+    val ids = spark.range(100).toDF("id")
+    val dir = tmpDir("clamp_leak")
+    try {
+      keys.foreach(spark.conf.unset)
+      // 10M items, 80M bits: above both default clamps, on the Bloom path
+      val hits = graft.api.Dedup.decontaminationStats(corpus, suite, "k", "body",
+          bloomItems = 10000000L, broadcastCutover = 0L)
+        .select($"k").as[Long].collect().toSeq
+      assert(hits === Seq(1L))
+      assert(setKeys === Nil, "decontaminationStats left a clamp key set")
+      graft.api.Layout.writeBloomIndexed(ids, s"$dir/ok", "id", 2, items = 5000000L)
+      assert(setKeys === Nil, "writeBloomIndexed left a clamp key set")
+      intercept[Exception](
+        graft.api.Layout.writeBloomIndexed(ids, s"$dir/bad", "no_such_column", 2, items = 5000000L))
+      assert(setKeys === Nil, "a failing writeBloomIndexed left a clamp key set")
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -273,6 +273,25 @@ class ReplicatorSpec extends SparkSpec {
       === Seq("s-active"))
   }
 
+  test("a failed forward write reports successful = 0 per stream, then fails the batch") {
+    import spark.implicits._
+    val cfgDir = tmpDir("cfg_fail")
+    configDf.write.mode("overwrite").parquet(cfgDir)
+    // a regular file where the target directory should be: unwritable
+    val target = s"${tmpDir("target_fail")}/target"
+    java.nio.file.Files.write(java.nio.file.Paths.get(target), "not a directory".getBytes)
+    val (cpTable, metrics, scp) = (tmpDir("cptable_fail"), tmpDir("metrics_fail"), tmpDir("scp_fail"))
+    val mem = MemoryStream[KinesisRecord](spark)
+    mem.addData(twoStreams :+ rec("s-active", "pk-3", "102", 3000L, 3L, "2021-11-10T04:00:03Z"): _*)
+    val q = Replicator.run(spark, mem.toDF(), cfgDir, "us-east-1", target, cpTable, metrics, scp)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination(60000))
+    val m = spark.read.parquet(metrics)
+      .select($"streamName", $"batchSize", $"successful", $"batchId")
+      .as[(String, Long, Long, Long)].collect().toSeq
+    assert(m === Seq(("s-active", 2L, 0L, 0L)))
+    assert(dataFiles(cpTable).isEmpty, "a failed batch must not move the checkpoint")
+  }
+
   test("job-count lock: a micro-batch runs at most 4 jobs and its forward write has no Exchange") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -348,8 +367,9 @@ class ReplicatorSpec extends SparkSpec {
     assert(forward.size === 1, "one forward write per micro-batch")
     val plan = forward.head
     assert(!plan.exists(_.isInstanceOf[Exchange]), plan.mkString("\n"))
-    // the per-stream summary is ONE aggregate, however many streams pass
-    val observed = plan.collect { case c: CollectMetricsExec if c.name != "replicator" => c }
+    // the forward plan observes ONE aggregate: the per-stream summary,
+    // however many streams pass
+    val observed = plan.collect { case c: CollectMetricsExec => c }
     assert(observed.map(_.metricExpressions.size) === Seq(1))
   }
 }
