@@ -420,13 +420,12 @@ object Graph {
   }
 
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
-      broadcastMaxEdges: Long = 8000000L,
-      alreadyMaterialized: Boolean = false): DataFrame = {
-    // alreadyMaterialized: callers that hand in a frame they have
-    // localCheckpoint'd themselves ([[topologyCard]]) skip the redundant
-    // second edge materialization job
-    val sel = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-    val e = if (alreadyMaterialized) sel else sel.localCheckpoint()
+      broadcastMaxEdges: Long = 8000000L): DataFrame =
+    materializedTriangleCounts(
+      edges.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint(), broadcastMaxEdges)
+
+  /** [[triangleCounts]] of an already materialized (a, b) edge frame. */
+  private def materializedTriangleCounts(e: DataFrame, broadcastMaxEdges: Long): DataFrame = {
     val (n2c, qsz, qe) = twinQuotient(e)
     val qszB = broadcast(qsz)
     // within-class triangles: C(m-1, 2) per member
@@ -498,8 +497,7 @@ object Graph {
           .withColumnRenamed("d", "d_dst"), Seq("dst"))
       .agg(sum(col("d_src").cast(dec) * col("d_dst").cast(dec)).as("sxy"),
         count(lit(1)).as("m2"))
-    val triAgg = triangleCounts(pairs, "id_a", "id_b",
-        alreadyMaterialized = true)
+    val triAgg = materializedTriangleCounts(pairs.toDF("a", "b"), 8000000L)
       .agg((sum(col("n_triangles")) / 3).cast("long").as("n_triangles"))
       .select(coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
     val num = (col("m2").cast(dec) * col("sxy")) - (col("s1e") * col("s1e"))

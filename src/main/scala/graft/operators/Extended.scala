@@ -33,8 +33,9 @@ object Extended {
         round(var_samp($"l_quantity"), 4).as("var_qty"),
         round(var_pop($"l_quantity"), 4).as("varp_qty"),
         round(corr($"l_quantity", $"l_extendedprice"), 4).as("corr_qty_price"),
-        round(covar_samp($"l_quantity", $"l_discount"), 4).as("cov_qty_disc"),
-        round(covar_pop($"l_quantity", $"l_discount"), 4).as("covp_qty_disc"))
+        // + 0.0 maps a rounded -0.0 to 0.0, as the oracle SQL does
+        (round(covar_samp($"l_quantity", $"l_discount"), 4) + 0.0).as("cov_qty_disc"),
+        (round(covar_pop($"l_quantity", $"l_discount"), 4) + 0.0).as("covp_qty_disc"))
       .orderBy($"l_returnflag")
   }
 
@@ -45,8 +46,8 @@ object Extended {
       |  round(var_samp(l_quantity), 4) AS var_qty,
       |  round(var_pop(l_quantity), 4) AS varp_qty,
       |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-      |  round(covar_samp(l_quantity, l_discount), 4) AS cov_qty_disc,
-      |  round(covar_pop(l_quantity, l_discount), 4) AS covp_qty_disc
+      |  round(covar_samp(l_quantity, l_discount), 4) + 0.0 AS cov_qty_disc,
+      |  round(covar_pop(l_quantity, l_discount), 4) + 0.0 AS covp_qty_disc
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   /** q65: regex surface — extract, count, global replace, match test

@@ -116,36 +116,15 @@ class UtilSpec extends SparkSpec {
   }
 
   test("batchAlreadyApplied: a probe of a committed path starts one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val path = s"${tmpDir("probe_jobs")}/state"
     Seq(("x", 5L)).toDF("v", "batch_id").coalesce(1).write.parquet(path)
-    val Phase = "graft.test.batchAlreadyApplied.phase"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    val rec = new Profile.Recorder(spark)
     try {
-      sc.setLocalProperty(Phase, "probe")
-      assert(Util.batchAlreadyApplied(spark, path, 5L))
-      // the bus delivers in order: once the marker job is seen, every
-      // earlier job start has been delivered too
-      sc.setLocalProperty(Phase, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      val seen = jobs.asScala.toSeq
-      assert(seen.count(_ == "marker") === 1)
+      rec.phase("probe")(assert(Util.batchAlreadyApplied(spark, path, 5L)))
       // no schema-inference job: only the keyed read itself
-      assert(seen.count(_ == "probe") === 1, seen)
-    } finally {
-      sc.setLocalProperty(Phase, null)
-      sc.removeSparkListener(listener)
-    }
+      assert(rec.jobs("probe").size === 1)
+    } finally rec.close()
   }
 
   test("fan-out pools are bounded by design and layered as a DAG") {
@@ -319,39 +298,19 @@ class UtilSpec extends SparkSpec {
   }
 
   test("readParquet: a cold read starts one Spark job, a warm read none") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val path = tmpParquet("jobs")
     writeSingle(Seq((1L, "a")).toDF("k", "v"), path)
-    val Phase = "graft.test.readParquet.phase"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    val rec = new Profile.Recorder(spark)
     try {
-      sc.setLocalProperty(Phase, "cold")
-      Util.readParquet(spark, path)
-      sc.setLocalProperty(Phase, "warm")
-      Util.readParquet(spark, path)
-      Util.readParquet(spark, path).select("v")
-      // the bus delivers in order: once the marker job is seen, every
-      // earlier job start has been delivered too
-      sc.setLocalProperty(Phase, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      val seen = jobs.asScala.toSeq
-      assert(seen.count(_ == "marker") === 1)
-      assert(seen.count(_ == "cold") === 1, seen)
-      assert(seen.count(_ == "warm") === 0, seen)
-    } finally {
-      sc.setLocalProperty(Phase, null)
-      sc.removeSparkListener(listener)
-    }
+      rec.phase("cold")(Util.readParquet(spark, path))
+      rec.phase("warm") {
+        Util.readParquet(spark, path)
+        Util.readParquet(spark, path).select("v")
+      }
+      assert(rec.jobs("cold").size === 1)
+      assert(rec.jobs("warm").size === 0)
+    } finally rec.close()
   }
 
   test("readParquet: concurrent cold reads of one path all get the right schema") {

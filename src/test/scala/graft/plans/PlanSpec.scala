@@ -3,8 +3,7 @@ package graft.plans
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
-import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape regression tests: the properties that make these queries
@@ -16,21 +15,21 @@ class PlanSpec extends SparkSpec {
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
+  /** Node name → count over `df`'s physical plan (subqueries included). */
+  private def nodeCounts(df: DataFrame): Map[String, Int] =
+    graft.Profile.fingerprint(df.queryExecution.executedPlan).withDefaultValue(0)
+
   /** (partition-key names, first order-key name) of every window operator
     * in `df`'s physical plan, looked up by attribute name rather than by
     * the spelling of expression ids.
     */
   private def windowKeys(df: DataFrame): Seq[(Seq[String], String)] = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
     def name(e: Expression): String = e match {
       case a: Attribute => a.name
       case s: SortOrder => name(s.child)
       case other => other.sql
     }
-    nodes(df.queryExecution.executedPlan).collect { case w: WindowExec =>
+    graft.Profile.nodes(df.queryExecution.executedPlan).collect { case w: WindowExec =>
       (w.partitionSpec.map(name), w.orderSpec.headOption.map(name).getOrElse(""))
     }
   }
@@ -76,17 +75,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q43: centroid assignment is narrow (no Window before the cell join)") {
-    val p = planOf(graft.operators.SimilarityOps.q43IvfKnn(spark, sf))
+    val df = graft.operators.SimilarityOps.q43IvfKnn(spark, sf)
+    val p = planOf(df)
     // exactly one Window node: the final per-probe top-k
-    assert("\\(\\d+\\) Window\\b".r.findAllIn(p).size === 1)
+    assert(nodeCounts(df)("Window") === 1)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
   }
 
   test("q38: minhash signatures plan has no shuffle before the output sort") {
-    val p = planOf(graft.operators.DedupOps.q38MinhashSigs(spark, sf))
+    val df = graft.operators.DedupOps.q38MinhashSigs(spark, sf)
+    val p = planOf(df)
     // the only exchanges allowed: the deliberate repartition(doc_id) spread
     // and the final rangepartitioning sort
-    val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p).size
+    val exchanges = nodeCounts(df)("Exchange")
     assert(exchanges <= 2, s"expected <=2 exchanges, plan:\n$p")
     assert(p.contains("text_shingles") || p.contains("minhash_sigs"))
   }
@@ -130,13 +131,13 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("ScalaUDF"), s"$name must not plan boxed UDF nodes:\n$p")
       assert(!p.contains("Generate"), s"$name must not explode rows:\n$p")
       // the deliberate scan-spread repartition and the output sort only
-      assert("\\(\\d+\\) Exchange".r.findAllIn(p).size <= 2,
-        s"$name expected <=2 exchanges:\n$p")
+      assert(nodeCounts(df)("Exchange") <= 2, s"$name expected <=2 exchanges:\n$p")
     }
   }
 
   test("q88: vocab ranking is two-phase — partial WindowGroupLimit, full vocab never hits one task") {
-    val p = planOf(graft.operators.TextOps.q88VocabCoverage(spark, sf))
+    val df = graft.operators.TextOps.q88VocabCoverage(spark, sf)
+    val p = planOf(df)
     // the rank<=100 filter must plan a Partial WindowGroupLimit so each
     // partition forwards only its own top-100 of the vocab frame (a raw
     // web-scale vocabulary is 1e8-1e9 distinct tokens — the r4 verdict's
@@ -148,7 +149,7 @@ class PlanSpec extends SparkSpec {
     // corpus is deliberately read twice now: the counts subtree and the
     // narrow per-doc token-total scan (the scalar broadcast) — but never
     // a third time
-    assert("\\(\\d+\\) Scan parquet".r.findAllIn(p).size === 2,
+    assert(nodeCounts(df)("Scan parquet") === 2,
       s"q88 must read the corpus exactly twice (counts + narrow total):\n$p")
   }
 
@@ -193,8 +194,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q146: the three context lags share one window shuffle") {
-    val p = planOf(graft.operators.EventOps.q146NextEventPairs(spark, sf))
-    assert("\\(\\d+\\) Window\\b".r.findAllIn(p).size === 1,
+    val df = graft.operators.EventOps.q146NextEventPairs(spark, sf)
+    val p = planOf(df)
+    assert(nodeCounts(df)("Window") === 1,
       s"q146's lags must ride a single Window node, not one per lag:\n$p")
   }
 
@@ -221,13 +223,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q101: chunking is one narrow explode — no shuffle beyond the output sort") {
-    val p = planOf(graft.operators.TextOps.q101DocChunks(spark, sf))
+    val df = graft.operators.TextOps.q101DocChunks(spark, sf)
+    val p = planOf(df)
     assert(p.contains("Generate"), s"q101 plans via posexplode:\n$p")
     assert(!p.contains("ScalaUDF"), s"q101 must stay codegen'd:\n$p")
     // the only exchanges allowed: the deliberate scan-spread repartition
     // (single-row-group testdata) and the final output orderBy — chunk
     // production itself never shuffles
-    assert("\\(\\d+\\) Exchange".r.findAllIn(p).size <= 2,
+    assert(nodeCounts(df)("Exchange") <= 2,
       s"q101 chunk production must be shuffle-free:\n$p")
     assert(!p.contains("hashpartitioning(chunk"),
       s"chunks must never be a shuffle key:\n$p")
@@ -530,9 +533,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q152: attribution is a window carry, never a purchases×touches self-join") {
-    val p = planOf(graft.operators.EventOps.q152Attribution(spark, sf))
-    assert(!p.contains("Join"), "last-touch lookup must not join")
-    assert("\\(\\d+\\) Window\\b".r.findAllIn(p).size === 1)
+    val df = graft.operators.EventOps.q152Attribution(spark, sf)
+    assert(!planOf(df).contains("Join"), "last-touch lookup must not join")
+    assert(nodeCounts(df)("Window") === 1)
   }
 
   test("q154: weighted sample keeps the partial top-k gate before the shuffle") {
@@ -550,9 +553,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q157: correlation matrix is one aggregation pass — no join, no window") {
-    val p = planOf(graft.operators.SimilarityOps.q157DimCorr(spark, sf))
-    assert(!p.contains("Join"))
-    assert(!"\\(\\d+\\) Window\\b".r.findAllIn(p).hasNext)
+    val df = graft.operators.SimilarityOps.q157DimCorr(spark, sf)
+    assert(!planOf(df).contains("Join"))
+    assert(nodeCounts(df)("Window") === 0)
   }
 
   test("q159/q169: regression fits are single-pass aggregations — no join, no window") {
@@ -560,7 +563,7 @@ class PlanSpec extends SparkSpec {
         graft.operators.Extended.q169Ols2(spark, sf))) {
       val p = planOf(df)
       assert(!p.contains("Join"), "closed-form fit must not join")
-      assert(!"\\(\\d+\\) Window\\b".r.findAllIn(p).hasNext)
+      assert(nodeCounts(df)("Window") === 0)
       assert(p.contains("partial_"), "moment sums must combine map-side")
     }
   }
@@ -649,10 +652,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q223: the whole generalization ladder reads customer ONCE (explode, not 4 scans)") {
-    val p = planOf(graft.operators.GovernanceOps.q223GeneralizationLadder(spark, sf))
-    // formatted explain lists each node once in the tree and once in the
-    // details; the details header line "(n) Scan parquet" counts scans
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size === 1,
+    val df = graft.operators.GovernanceOps.q223GeneralizationLadder(spark, sf)
+    val p = planOf(df)
+    assert(nodeCounts(df)("Scan parquet") === 1,
       "the width ladder must fan out of one scan, not re-scan per width")
     assert(p.contains("Generate"), "widths come from a constant explode")
   }
@@ -674,13 +676,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q248: first/last attribution runs ONE event pass (contingency checkpoint, no re-expanded scans)") {
-    val p = planOf(graft.operators.EventOps.q248AttributionCompare(spark, sf))
+    val n = nodeCounts(graft.operators.EventOps.q248AttributionCompare(spark, sf))
     // the window pass materializes into the |channels|^2 contingency
     // frame once; the final plan must read ONLY that checkpoint — a
     // re-expanded window subtree would show parquet scans per consumer
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size === 0,
+    assert(n("Scan parquet") === 0,
       "marginals must derive from the checkpointed contingency frame")
-    assert("(?m)^\\(\\d+\\) Window".r.findAllIn(p).size <= 1)
+    assert(n("Window") + n("WindowGroupLimit") <= 1)
   }
 
   test("q230: correlated-min supplier pick broadcasts every dimension") {
@@ -701,12 +703,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q254: the EXISTS is a semi-join with the lateness residual, not a count-filter") {
-    val p = planOf(graft.operators.Relational.q254OrderPriority(spark, sf))
+    val df = graft.operators.Relational.q254OrderPriority(spark, sf)
+    val p = planOf(df)
     assert(p.contains("LeftSemi"),
       "correlated EXISTS must plan as a left semi hash join")
     // exactly one aggregate: the per-priority count (no per-order
     // pre-count that would materialize lineitem multiplicity)
-    assert("(?m)^\\(\\d+\\) HashAggregate".r.findAllIn(p).size <= 2,
+    assert(nodeCounts(df)("HashAggregate") <= 2,
       s"only the partial+final priority count may aggregate:\n$p")
   }
 
@@ -732,11 +735,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q188: bootstrap replicates are aggregate SLOTS — no explode, no join, one aggregation") {
-    val p = planOf(graft.operators.EventOps.q188BootstrapCi(spark, sf))
+    val df = graft.operators.EventOps.q188BootstrapCi(spark, sf)
+    val p = planOf(df)
     assert(!p.contains("Generate"),
       "replicate weights must be columns, never an exploded row fanout")
     assert(!p.contains("Join"), "full-sample stats fold in the same agg")
-    assert("(?m)^\\(\\d+\\) HashAggregate".r.findAllIn(p).size <= 2,
+    assert(nodeCounts(df)("HashAggregate") <= 2,
       s"one partial+final aggregate pair only:\n$p")
   }
 
@@ -757,25 +761,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q270: sequential monitor reads events ONCE — looks are a constant frame") {
-    val p = planOf(graft.operators.EventOps.q270SequentialMonitor(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size <= 1,
+    val df = graft.operators.EventOps.q270SequentialMonitor(spark, sf)
+    val p = planOf(df)
+    assert(nodeCounts(df)("Scan parquet") <= 1,
       s"one event scan only; the five looks must come from a LocalRelation:\n$p")
     assert(p.contains("HashAggregate"))
   }
 
   test("q272: RD moments fold as exact decimals below a two-row fit — no window, no sort of customers") {
-    val p = planOf(graft.operators.EventOps.q272RegressionDiscontinuity(spark, sf))
-    assert(!p.contains("Window"), "OLS must be moment folds, never a window")
-    assert("(?m)^\\(\\d+\\) Sort".r.findAllIn(p).size <= 1,
+    val df = graft.operators.EventOps.q272RegressionDiscontinuity(spark, sf)
+    assert(!planOf(df).contains("Window"), "OLS must be moment folds, never a window")
+    val n = nodeCounts(df)
+    assert(n("Sort") + n("SortAggregate") + n("SortMergeJoin") <= 1,
       "no customer-level sort (the single output row needs none)")
   }
 
   test("q279: baskets build once; supports broadcast back; pair join keyed on the order") {
-    val p = planOf(graft.operators.Relational.q279AssocRules(spark, sf))
+    val df = graft.operators.Relational.q279AssocRules(spark, sf)
+    val p = planOf(df)
     assert(!p.contains("CartesianProduct"),
       "the item-pair join must stay keyed on the order id")
     // the two support lookups and the basket total ride broadcasts
-    assert("(?m)^\\(\\d+\\) BroadcastHashJoin".r.findAllIn(p).size >= 2,
+    assert(nodeCounts(df)("BroadcastHashJoin") >= 2,
       s"support joins must broadcast:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       "top-15 by lift must be a heap cut, not a global sort")
@@ -800,11 +807,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q291: point-in-time features ride ONE user-keyed window — no event self-join, no global sort") {
-    val p = planOf(graft.operators.EventOps.q291TrainingAssembly(spark, sf))
-    assert("(?m)^\\(\\d+\\) Window\\b".r.findAllIn(p).size === 1,
+    val df = graft.operators.EventOps.q291TrainingAssembly(spark, sf)
+    val p = planOf(df)
+    assert(nodeCounts(df)("Window") === 1,
       s"one value-ranged window carries all features:\n$p")
     assert(!p.contains("CartesianProduct"))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size <= 1,
+    assert(nodeCounts(df)("Scan parquet") <= 1,
       "events must be scanned once")
   }
 
@@ -861,7 +869,7 @@ class PlanSpec extends SparkSpec {
         // distributed stage is the exposed per-partition moment kernel
         "q318" -> graft.operators.SimilarityOps.q318MomentPartials(spark, sf).toDF())) {
       val p = planOf(df)
-      assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size === 1,
+      assert(nodeCounts(df)("Scan parquet") === 1,
         s"$name must read embeddings exactly once:\n${p.take(1500)}")
       // A Generate is only legal ABOVE the aggregate (the stack unpivot
       // of the one-row moment result); in formatted output parents print
@@ -895,21 +903,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q312/q313: reconciliation and shard planner stay one-pass and keyed") {
-    val p12 = planOf(graft.operators.EventOps.q312Reconciliation(spark, sf))
+    val q312 = graft.operators.EventOps.q312Reconciliation(spark, sf)
+    val p12 = planOf(q312)
     // both sides of the ledger fold from ONE events scan — the replica is
     // an integer multiplicity factor, never a materialized second frame
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p12).size === 1,
+    assert(nodeCounts(q312)("Scan parquet") === 1,
       "reconciliation must scan events exactly once")
     assert(!p12.contains("Union"), "the duplicate sliver must not be a union")
-    val p13 = planOf(graft.operators.EventOps.q313ShardSplitAdvisor(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p13).size === 1)
+    val q313 = graft.operators.EventOps.q313ShardSplitAdvisor(spark, sf)
+    val p13 = planOf(q313)
+    assert(nodeCounts(q313)("Scan parquet") === 1)
     assert(p13.contains("event_type"), "cumsum window must key per stream")
     assert(!p13.contains("CartesianProduct"))
   }
 
   test("q314/q315/q316: rank tests fold from integer moments — no percentile, broadcast-only joins") {
-    val p14 = planOf(graft.operators.EventOps.q314Anova(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p14).size === 1,
+    val q314 = graft.operators.EventOps.q314Anova(spark, sf)
+    val p14 = planOf(q314)
+    assert(nodeCounts(q314)("Scan parquet") === 1,
       "ANOVA is one grouped pass of the event scan")
     assert(!p14.toLowerCase.contains("percentile("))
     val p15 = planOf(graft.operators.EventOps.q315KruskalWallis(spark, sf))
@@ -935,38 +946,43 @@ class PlanSpec extends SparkSpec {
       s"rank window must partition by (layout, bucket):\n$p")
     assert(!windows.contains((Seq("layout"), "k")),
       s"no single-partition-per-layout rank window may remain:\n$p")
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).size <= 2,
+    assert(nodeCounts(q317)("Scan parquet") <= 2,
       "one layout pass + one bounds pass")
   }
 
   test("q320/q321: feature-rank and ordering audits stay one-pass with keyed windows") {
-    val p20 = planOf(graft.operators.SimilarityOps.q320MiFeatureRank(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p20).size === 1,
+    val q320 = graft.operators.SimilarityOps.q320MiFeatureRank(spark, sf)
+    val p20 = planOf(q320)
+    assert(nodeCounts(q320)("Scan parquet") === 1,
       "MI ranking reads embeddings once; marginals are windows over the bounded counts frame")
     assert(!p20.contains("CartesianProduct"))
-    val p21 = planOf(graft.operators.EventOps.q321OrderingAudit(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p21).size === 1)
+    val q321 = graft.operators.EventOps.q321OrderingAudit(spark, sf)
+    val p21 = planOf(q321)
+    assert(nodeCounts(q321)("Scan parquet") === 1)
     assert(p21.contains("user_id"), "lag window must key per (stream, user)")
   }
 
   test("q322/q324: bounded derived frames are checkpointed — ONE base-table scan each") {
-    val p22 = planOf(graft.operators.EventOps.q322GrowthAccounting(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p22).size === 0 &&
+    val q322 = graft.operators.EventOps.q322GrowthAccounting(spark, sf)
+    val p22 = planOf(q322)
+    assert(nodeCounts(q322)("Scan parquet") === 0 &&
       p22.contains("ExistingRDD"),
       "growth accounting folds events once into a checkpointed per-day frame; " +
         "the churn shift and outer join reuse it")
-    val p24 = planOf(graft.operators.TextOps.q324IsotonicCalibration(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p24).size === 0 &&
+    val q324 = graft.operators.TextOps.q324IsotonicCalibration(spark, sf)
+    val p24 = planOf(q324)
+    assert(nodeCounts(q324)("Scan parquet") === 0 &&
       p24.contains("ExistingRDD"),
       "isotonic fit reads documents once; the j/k/i self-joins reuse the " +
         "checkpointed 50-bin frame")
   }
 
   test("q262: disjunctive triple rides ONE broadcast join; brand IN pushed to the part scan") {
-    val p = planOf(graft.operators.Relational.q262DiscountedRevenue(spark, sf))
+    val df = graft.operators.Relational.q262DiscountedRevenue(spark, sf)
+    val p = planOf(df)
     assert(p.contains("In(p_brand"),
       "the brand union must prune the dimension scan")
-    assert("(?m)^\\(\\d+\\) BroadcastHashJoin".r.findAllIn(p).size === 1,
+    assert(nodeCounts(df)("BroadcastHashJoin") === 1,
       "exactly one part join carries the OR residual")
     assert(!p.contains("CartesianProduct"))
     assert(!p.contains("Union"), "never a union-of-three-scans rewrite")
@@ -984,11 +1000,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q344/q349: daily frames checkpointed — spectral/Hurst folds never rescan events") {
-    val p44 = planOf(graft.operators.EventOps.q344WeeklySpectrum(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p44).size === 0 &&
+    val q344 = graft.operators.EventOps.q344WeeklySpectrum(spark, sf)
+    val p44 = planOf(q344)
+    assert(nodeCounts(q344)("Scan parquet") === 0 &&
       p44.contains("ExistingRDD"))
-    val p49 = planOf(graft.operators.EventOps.q349HurstRs(spark, sf))
-    assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p49).size === 0 &&
+    val q349 = graft.operators.EventOps.q349HurstRs(spark, sf)
+    val p49 = planOf(q349)
+    assert(nodeCounts(q349)("Scan parquet") === 0 &&
       p49.contains("ExistingRDD"),
       "all three block sizes must reuse the checkpointed |days| frame")
   }

@@ -294,14 +294,11 @@ class ReplicatorSpec extends SparkSpec {
 
   test("job-count lock: a micro-batch runs at most 4 jobs and its forward write has no Exchange") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{CollectMetricsExec, CommandResultExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.CollectMetricsExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.streaming.runtime.{MicroBatchExecution, StreamExecution}
-    import org.apache.spark.sql.util.QueryExecutionListener
 
     val cfgDir = tmpDir("cfg_jobs")
     (0 until 6).map(i => (s"s-$i", if (i == 5) "eu-west-1" else "us-east-1"))
@@ -309,55 +306,29 @@ class ReplicatorSpec extends SparkSpec {
     val records = (1 to 60).map(i =>
       rec(s"s-${i % 6}", s"pk-$i", s"${1000 + i}", i * 1000L, i.toLong, f"2021-11-10T05:00:$i%02dZ"))
 
-    // (queryId, batchId) of every job, and every successful write's execution
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
-        jobs.add((p.getProperty(StreamExecution.QUERY_ID_KEY),
-          p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
-      }
-    }
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // both listeners must exist before the query clones its session
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
+    // the recorder must exist before the query clones its session
+    val recorder = new graft.Profile.Recorder(spark)
     val mem = MemoryStream[KinesisRecord](spark)
     mem.addData(records: _*)
     val (target, cpTable, metrics, scp) =
       (tmpDir("target_jobs"), tmpDir("cptable_jobs"), tmpDir("metrics_jobs"), tmpDir("scp_jobs"))
-    val q = try {
+    val q = try recorder.phase("replicate") {
       val q = Replicator.run(spark, mem.toDF(), cfgDir, "us-east-1", target, cpTable, metrics, scp)
       q.awaitTermination(60000)
-      // deliver every queued listener event before reading the counts
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
       q
-    } finally {
-      spark.sparkContext.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(qeListener)
-    }
+    } finally recorder.close()
     assert(spark.read.parquet(target).count() === 50)
 
-    val perBatch = jobs.toArray(Array.empty[(String, String)]).toSeq
-      .filter(_._1 == q.id.toString).groupBy(_._2).view.mapValues(_.size).toMap
+    val perBatch = recorder.jobs("replicate")
+      .filter(_.getProperty(StreamExecution.QUERY_ID_KEY) == q.id.toString)
+      .groupBy(_.getProperty(MicroBatchExecution.BATCH_ID_KEY)).view.mapValues(_.size).toMap
     assert(perBatch.nonEmpty, "no job of the query was seen")
     // config read, forward write, checkpoint write, metrics write
     assert(perBatch.values.forall(_ <= 4), s"jobs per micro-batch: $perBatch")
 
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case _ => p.children.flatMap(nodes)
-    })
     val targetName = new java.io.File(target).getName
-    val forward = qes.toArray(Array.empty[QueryExecution]).toSeq
-      .map(qe => nodes(qe.executedPlan)).filter(_.exists {
+    val forward = recorder.qes("replicate").map(qe => graft.Profile.nodes(qe.executedPlan))
+      .filter(_.exists {
         case d: DataWritingCommandExec => d.cmd match {
           case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == targetName
           case _ => false
