@@ -191,6 +191,18 @@ object Util {
     ()
   }
 
+  /** `df.localCheckpoint()` and its row count, from the one job that
+    * materializes it: an `Observation` of `count(1)` rides the
+    * checkpoint, and reading it starts no job, where a `count()` of the
+    * checkpointed frame would start more. The size-cutover operators
+    * pick their plan from this count.
+    */
+  private[graft] def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val seen = org.apache.spark.sql.Observation()
+    val cp = df.observe(seen, count(lit(1)).as("n")).localCheckpoint()
+    (cp, seen.get("n").asInstanceOf[Long])
+  }
+
   /** TIMESTAMP_NTZ literal (the testdata date columns are NTZ). */
   def ldt(s: String): Column = lit(java.time.LocalDateTime.parse(s))
 
@@ -283,8 +295,21 @@ object Util {
   private[graft] lazy val jobExecutor = daemonExecutor("graft-job", 4)
   private[graft] lazy val queryExecutor = daemonExecutor("graft-query", 2)
 
-  lazy val jobPool: scala.concurrent.ExecutionContextExecutorService =
-    scala.concurrent.ExecutionContext.fromExecutorService(jobExecutor)
-  lazy val queryPool: scala.concurrent.ExecutionContextExecutorService =
-    scala.concurrent.ExecutionContext.fromExecutorService(queryExecutor)
+  /** Runs each task through `SQLExecution.withThreadLocalCaptured`, the
+    * hand-off Spark's own AQE stage submission uses: the task runs under
+    * its submitter's active session and Spark local properties (job group,
+    * description, scheduler pool, streaming query and batch ids), and the
+    * pool thread's own are restored afterwards. Without it a pool thread
+    * keeps the properties of the thread that created it.
+    */
+  private def capturing(pool: java.util.concurrent.ExecutorService) =
+    scala.concurrent.ExecutionContext.fromExecutor(task =>
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+        case Some(s: org.apache.spark.sql.classic.SparkSession) =>
+          org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(s, pool)(task.run())
+        case _ => pool.execute(task)
+      })
+
+  lazy val jobPool: scala.concurrent.ExecutionContextExecutor = capturing(jobExecutor)
+  lazy val queryPool: scala.concurrent.ExecutionContextExecutor = capturing(queryExecutor)
 }

@@ -420,28 +420,16 @@ object Dedup {
     * distinct the benchmark twice.
     */
   private def benchShingleFrame(benchmark: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame =
-    shingleSets(benchmark, idCol, textCol, n)
-      .select(explode(col("sh_arr")).as("sh")).distinct()
-      .localCheckpoint()
+      textCol: String, n: Int): (DataFrame, Long) =
+    graft.Util.checkpointCounted(shingleSets(benchmark, idCol, textCol, n)
+      .select(explode(col("sh_arr")).as("sh")).distinct())
 
-  /** The Bloom pre-gate predicate. The benchmark's `bloom_filter_agg`
-    * runs EAGERLY here ([[graft.Util.bloomBytes]]: one narrow aggregate
-    * over the already materialized shingle frame) and the resulting
-    * filter bytes feed the corpus-side `might_contain` probe as a one-row
-    * scalar subquery — the broadcast-of-bits shape, with the build paid
-    * once at construction instead of once per query run.
-    *
-    * Why eager instead of an inline aggregate subquery: Spark clamps
-    * Bloom aggregates at its runtime Bloom-filter size limits (4M items
-    * / 8 MB by default, [[graft.Util.withBloomClamps]]) — silently
-    * saturating the filter for the very suites this gate exists for —
-    * and the clamp re-validates in `CheckAnalysis` on EVERY later
-    * Dataset composition, so a plan that embeds the aggregate forces the
-    * raised confs to stay raised for the frame's whole lifetime (the r6
-    * session-conf leak). With the aggregate executed up front, the confs
-    * are raised only around the build; the returned frame holds no
-    * `bloom_filter_agg` for later analysis passes to re-clamp.
+  /** The Bloom pre-gate predicate: the benchmark's filter is built
+    * EAGERLY by [[graft.Util.bloomBytes]] (one narrow aggregate over the
+    * materialized shingle frame, under scoped size clamps; its scaladoc
+    * says why not inline) and feeds the corpus-side `might_contain`
+    * probe as a one-row scalar subquery — the broadcast-of-bits shape,
+    * with the build paid once at construction, not once per query run.
     */
   private def bloomGated(corpusSh: DataFrame, benchSh: DataFrame,
       items: Long, bits: Long): DataFrame = {
@@ -459,14 +447,35 @@ object Dedup {
     * into one exact hash join (no gate — the Bloom pre-filter's fixed
     * build/probe cost buys nothing when the suite already fits a
     * broadcast; ~250k shingles ≈ 10 MB, Spark's own broadcast-sizing
-    * ballpark); above it the Bloom gate bounds the plan at ~10
-    * bits/shingle. The count is measured once on the already
-    * materialized (localCheckpoint'd) shingle frame, so the choice costs
-    * a narrow count over cached partitions, not a tokenization pass.
-    * Both paths are bit-identical: the exact join decides membership
-    * either way.
+    * ballpark); above it the Bloom gate bounds the plan at 8
+    * bits/shingle. The count is the one the shingle checkpoint
+    * observed, so the choice starts no job. Both paths are
+    * bit-identical: the exact join decides membership either way.
     */
-  val BroadcastSuiteCutover: Long = 250000L
+  private val BroadcastSuiteCutover: Long = 250000L
+
+  /** Route of the corpus shingles to the exact join, for a suite of
+    * `nSh` distinct shingles: None broadcasts the suite's shingle
+    * strings, Some((items, bits)) pre-filters through a Bloom filter.
+    */
+  private[graft] type ShingleGate = Long => Option[(Long, Long)]
+
+  /** The gate of both decontamination operators. */
+  private[graft] val suiteGate: ShingleGate = nSh =>
+    if (nSh <= BroadcastSuiteCutover) None else Some((nSh, nSh * 8L))
+
+  /** The corpus side and the benchmark side of the exact shingle join. */
+  private def gatedShingles(corpusSh: DataFrame, benchmark: DataFrame, idCol: String,
+      textCol: String, n: Int, gate: ShingleGate): (DataFrame, DataFrame) = {
+    val (benchSh, nSh) = benchShingleFrame(benchmark, idCol, textCol, n)
+    // small suite: no gate, hint the exact join to broadcast (the
+    // checkpointed frame carries default — huge — stats, so the planner
+    // cannot see it is broadcastable on its own)
+    gate(nSh) match {
+      case None => (corpusSh, broadcast(benchSh))
+      case Some((items, bits)) => (bloomGated(corpusSh, benchSh, items, bits), benchSh)
+    }
+  }
 
   /** Benchmark decontamination: per corpus document, how many of its
     * n-word shingles appear anywhere in `benchmark` — (idCol, n_sh,
@@ -475,45 +484,28 @@ object Dedup {
     * n-grams"): production pipelines do exactly this with 8–13-gram
     * overlap against held-out benchmarks.
     *
-    * Plan shape is ADAPTIVE on the measured suite size
-    * ([[BroadcastSuiteCutover]]). Small suites (the common single-
-    * benchmark case) broadcast their distinct shingle strings straight
-    * into the exact join — one narrow probe, no gate. Large suites
-    * (many benchmarks × 8-grams) outgrow broadcasting their shingle
-    * STRINGS, but their Bloom filter is ~10 bits/shingle — the corpus
-    * side probes `might_contain` against the benchmark's
-    * `bloom_filter_agg` (a scalar subquery computed once and inlined
-    * into the probe's codegen; no join) so only the gate's survivors —
-    * true leaks plus the filter's ~1% false positives, proportional to
-    * the leak rate, not the corpus — reach the exact shingle join,
-    * which the planner is free to run as a shuffle join when the suite
-    * is too big to broadcast (no broadcast hint pins it). The exact
-    * join makes Bloom false positives harmless: results are
-    * bit-identical across both paths. Anti-join the result against the
-    * corpus to keep the clean remainder.
-    *
-    * @param bloomItems  expected distinct benchmark shingles (sizes the
-    *                    filter; ~1% FP at the default bits/item ratio)
-    * @param bloomBits   filter size in bits (tests shrink it to force
-    *                    false positives; defaults to 8 bits/item)
-    * @param broadcastCutover suite-shingle count at or below which the
-    *                    broadcast path runs (tests pass 0 to force the
-    *                    Bloom gate)
+    * Plan shape is ADAPTIVE on the suite size that its shingle
+    * checkpoint observed ([[BroadcastSuiteCutover]]). Small suites (the
+    * common single-benchmark case) broadcast their distinct shingle
+    * strings straight into the exact join. Large suites outgrow
+    * broadcasting their shingle STRINGS, but not their 8-bit-per-shingle
+    * Bloom filter: the corpus side probes it (a scalar subquery inlined
+    * into the probe's codegen; no join), so only true leaks plus the
+    * filter's ~2% false positives reach the exact shingle join, which
+    * the planner may run as a shuffle join (no broadcast hint pins it).
+    * Results are bit-identical across both paths. Anti-join the result
+    * against the corpus to keep the clean remainder.
     */
   def decontaminationStats(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, n: Int = 4,
-      bloomItems: Long = 1000000L, bloomBits: Long = 0L,
-      broadcastCutover: Long = BroadcastSuiteCutover): DataFrame = {
-    val bits = if (bloomBits > 0L) bloomBits else bloomItems * 8L
-    val benchSh = benchShingleFrame(benchmark, idCol, textCol, n)
+      idCol: String, textCol: String, n: Int = 4): DataFrame =
+    decontaminationStats(corpus, benchmark, idCol, textCol, n, suiteGate)
+
+  /** [[decontaminationStats]] through the route `gate` picks. */
+  private[graft] def decontaminationStats(corpus: DataFrame, benchmark: DataFrame,
+      idCol: String, textCol: String, n: Int, gate: ShingleGate): DataFrame = {
     val corpusSh = shingleSets(corpus, idCol, textCol, n)
       .select(col(idCol), col("n_sh"), explode(col("sh_arr")).as("sh"))
-    // small suite: no gate, hint the exact join to broadcast (the
-    // checkpointed frame carries default — huge — stats, so the planner
-    // cannot see it is broadcastable on its own)
-    val (gated, benchSide) =
-      if (benchSh.count() <= broadcastCutover) (corpusSh, broadcast(benchSh))
-      else (bloomGated(corpusSh, benchSh, bloomItems, bits), benchSh)
+    val (gated, benchSide) = gatedShingles(corpusSh, benchmark, idCol, textCol, n, gate)
     gated.join(benchSide, "sh")
       .groupBy(col(idCol), col("n_sh"))
       .agg(count(lit(1)).as("n_contaminated"))
@@ -533,16 +525,15 @@ object Dedup {
     * foreachBatch, where the batch-relational anti-join is legal.
     */
   def decontaminationDrop(corpus: DataFrame, benchmark: DataFrame,
-      idCol: String, textCol: String, n: Int = 4,
-      bloomItems: Long = 1000000L, bloomBits: Long = 0L,
-      broadcastCutover: Long = BroadcastSuiteCutover): DataFrame = {
-    val bits = if (bloomBits > 0L) bloomBits else bloomItems * 8L
-    val benchSh = benchShingleFrame(benchmark, idCol, textCol, n)
+      idCol: String, textCol: String, n: Int = 4): DataFrame =
+    decontaminationDrop(corpus, benchmark, idCol, textCol, n, suiteGate)
+
+  /** [[decontaminationDrop]] through the route `gate` picks. */
+  private[graft] def decontaminationDrop(corpus: DataFrame, benchmark: DataFrame,
+      idCol: String, textCol: String, n: Int, gate: ShingleGate): DataFrame = {
     val corpusSh = shingleSets(corpus, idCol, textCol, n)
       .select(col(idCol), explode(col("sh_arr")).as("sh"))
-    val (gated, benchSide) =
-      if (benchSh.count() <= broadcastCutover) (corpusSh, broadcast(benchSh))
-      else (bloomGated(corpusSh, benchSh, bloomItems, bits), benchSh)
+    val (gated, benchSide) = gatedShingles(corpusSh, benchmark, idCol, textCol, n, gate)
     val contaminated = gated
       .join(benchSide, "sh", "left_semi")
       .select(col(idCol)).distinct()
@@ -557,7 +548,7 @@ object Dedup {
     * iterative large-star/small-star contraction is the only plan that
     * does not funnel the whole edge set through one task.
     */
-  val CcCutoverEdges: Long = 50L * 1000 * 1000
+  private val CcCutoverEdges: Long = 50L * 1000 * 1000
 
   /** Connected components over an edge list (id_a, id_b) — cluster id is
     * the component minimum: (id, cluster, cluster_size, is_keeper).
@@ -565,7 +556,7 @@ object Dedup {
     * Two physical plans behind one result, picked by edge count (the
     * edge frame is cached, so the count is not a wasted pass):
     *
-    *   - ≤ `cutoverEdges` (sparse LSH/threshold-filtered sets, the
+    *   - ≤ [[CcCutoverEdges]] (sparse LSH/threshold-filtered sets, the
     *     common case): one union-find pass on a single partition.
     *   - above it: alternating large-star/small-star edge contraction
     *     (Kiveris et al., "Connected Components in MapReduce and
@@ -577,17 +568,20 @@ object Dedup {
     * (union-by-min-root below; the star contraction's fixed point is the
     * min-centered star, proven in the paper).
     */
-  def clusterComponents(pairs: DataFrame,
-      cutoverEdges: Long = CcCutoverEdges): DataFrame = {
+  def clusterComponents(pairs: DataFrame): DataFrame =
+    clusterComponents(pairs, byStars = false)
+
+  /** [[clusterComponents]]; `byStars` takes the star contraction at any size. */
+  private[graft] def clusterComponents(pairs: DataFrame, byStars: Boolean): DataFrame = {
     // cached: the edge list is tiny relative to the corpus, but its
     // lineage is the whole candidate pipeline — the count below, the
     // chosen CC pass, and (iterative path) every contraction round read it
     val edges = tracked(pairs.select(col("id_a"), col("id_b")))
     val nEdges = edges.count()
     val comps =
-      if (nEdges <= cutoverEdges) unionFindComponents(edges)
+      if (!byStars && nEdges <= CcCutoverEdges) unionFindComponents(edges)
       else {
-        log.info(s"clusterComponents: $nEdges edges > cutover $cutoverEdges, " +
+        log.info(s"clusterComponents: $nEdges edges, cutover $CcCutoverEdges, " +
           "using iterative large-star/small-star contraction")
         starContractComponents(edges)
       }
@@ -805,10 +799,10 @@ object Dedup {
     * token scan, like the quantile family):
     *
     *  - **Bitmask path** (vocabulary ≤ 62 tokens AND distinct token
-    *    SETS ≤ `maskPathMaxMasks`): each document's token set is one
+    *    SETS ≤ [[MaskPathMaxMasks]]): each document's token set is one
     *    64-bit mask, so pair generation collapses to the
     *    DISTINCT-MASK square — a broadcast nested-loop over ≤
-    *    `maskPathMaxMasks` rows evaluating pure `bit_count`
+    *    [[MaskPathMaxMasks]] rows evaluating pure `bit_count`
     *    arithmetic, then an equi-join expansion back to document
     *    pairs (only qualifying pairs ever materialize). Prefix
     *    filtering is useless on such corpora — with every token hot,
@@ -831,45 +825,61 @@ object Dedup {
     * The distinct-token frame is localCheckpoint'd once (it feeds 2-4
     * consumers; live, each would re-run the corpus tokenization), and
     * both paths produce bit-identical output — the Jaccard division is
-    * the same exact-integer expression either way.
+    * the same exact-integer expression either way. Both choices read the
+    * row counts their own checkpoints observed, so deciding starts no
+    * job.
     */
   def ppJoinPairs(docs: DataFrame, idCol: String, textCol: String,
-      tau: Double, maskPathMaxMasks: Int = 32768): DataFrame = {
+      tau: Double): DataFrame = ppJoinPairs(docs, idCol, textCol, tau, byPrefix = false)
+
+  /** [[ppJoinPairs]]; `byPrefix` takes the prefix-filter path at any vocabulary. */
+  private[graft] def ppJoinPairs(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double, byPrefix: Boolean): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau out of (0,1]: $tau")
+    val (toks, dfreq, nVocab) = tokenFrames(docs, idCol, textCol)
+    (if (byPrefix) None else bitMasks(toks, dfreq, nVocab)) match {
+      case Some((masks, dm)) => ppJoinPairsMask(masks, dm, tau)
+      case None => ppJoinPairsPrefix(toks, dfreq, tau)
+    }
+  }
+
+  /** Distinct token sets up to which the mask square runs. */
+  private val MaskPathMaxMasks: Long = 32768L
+
+  /** The distinct (id, tok) rows and the document frequencies (tok, df),
+    * each checkpointed (several plan references read each), and the
+    * vocabulary size that the frequency checkpoint observed.
+    */
+  private def tokenFrames(docs: DataFrame, idCol: String,
+      textCol: String): (DataFrame, DataFrame, Long) = {
     val toks = docs.select(col(idCol).as("id"),
       explode(array_distinct(filter(split(col(textCol), " "),
         t => t =!= ""))).as("tok"))
       .localCheckpoint()
-    // both aggregates are read by MULTIPLE plan references downstream
-    // (dfreq: the vocab-size decision + the prefix ranking; sizes: the
-    // ranking plus the two per-side size joins of the verify) —
-    // materialize each once instead of re-running its shuffle per
-    // reference; both are vocab-/corpus-row-bounded small frames
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .localCheckpoint()
-    val sizes = toks.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      .localCheckpoint()
-    val smallVocab: Option[Array[String]] =
-      if (dfreq.count() <= 62)
-        Some(dfreq.select(col("tok")).orderBy(col("tok"))
-          .collect().map(_.getString(0)))
-      else None
-    smallVocab match {
-      case Some(vocabArr) =>
-        val masks = toks
-          .withColumn("bit",
-            (array_position(array(vocabArr.map(lit): _*), col("tok")) - 1)
-              .cast("int"))
-          .select(col("id"), expr("shiftleft(1L, bit)").as("b"))
-          .groupBy(col("id")).agg(expr("bit_or(b)").as("mask"))
-        val dm = masks.select(col("mask")).distinct()
-          .withColumn("sz", expr("bit_count(mask)"))
-          .localCheckpoint()
-        if (dm.count() <= maskPathMaxMasks) ppJoinPairsMask(masks, dm, tau)
-        else ppJoinPairsPrefix(toks, dfreq, sizes, tau)
-      case None => ppJoinPairsPrefix(toks, dfreq, sizes, tau)
-    }
+    val (dfreq, nVocab) = graft.Util.checkpointCounted(
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("df")))
+    (toks, dfreq, nVocab)
   }
+
+  /** The bitmask paths' inputs — per-document token masks (id, mask)
+    * and the checkpointed distinct masks (mask, sz) — or None when the
+    * vocabulary or the distinct-mask count that checkpoint observed is
+    * too large.
+    */
+  private def bitMasks(toks: DataFrame, dfreq: DataFrame,
+      nVocab: Long): Option[(DataFrame, DataFrame)] =
+    if (nVocab > 62) None
+    else {
+      val vocab = dfreq.select(col("tok")).collect().map(_.getString(0)).sorted
+      val masks = toks
+        .withColumn("bit",
+          (array_position(array(vocab.map(lit): _*), col("tok")) - 1).cast("int"))
+        .select(col("id"), expr("shiftleft(1L, bit)").as("b"))
+        .groupBy(col("id")).agg(expr("bit_or(b)").as("mask"))
+      val (dm, nMasks) = graft.Util.checkpointCounted(masks.select(col("mask")).distinct()
+        .withColumn("sz", expr("bit_count(mask)")))
+      if (nMasks <= MaskPathMaxMasks) Some((masks, dm)) else None
+    }
 
   /** Bitmask strategy of [[ppJoinPairs]]: qualifying DISTINCT-MASK pairs
     * via a bounded broadcast nested-loop of `bit_count` arithmetic
@@ -904,7 +914,10 @@ object Dedup {
     * operator's scaladoc for the algorithm.
     */
   private def ppJoinPairsPrefix(toks: DataFrame, dfreq: DataFrame,
-      sizes: DataFrame, tau: Double): DataFrame = {
+      tau: Double): DataFrame = {
+    // read by the ranking and both size joins of the verify
+    val sizes = toks.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+      .localCheckpoint()
     val ranked = toks.join(dfreq, "tok").join(sizes, "id")
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))))
@@ -1010,11 +1023,11 @@ object Dedup {
     * (id_small, id_large, n_inter, containment); equal-size pairs are
     * canonicalized id_small < id_large.
     *
-    * Adaptive like [[ppJoinPairs]] (same probe jobs, same eager
-    * construction semantics):
+    * Adaptive like [[ppJoinPairs]] (the same checkpoints and the same
+    * counts they observe, the same eager construction semantics):
     *
     *  - **Bitmask path** (vocabulary ≤ 62 tokens, distinct sets ≤
-    *    `maskPathMaxMasks`): the bounded broadcast square over DISTINCT
+    *    [[MaskPathMaxMasks]]): the bounded broadcast square over DISTINCT
     *    masks evaluates `bit_count(ma & mb) ≥ τ·bit_count(ma)` directly;
     *    equi-join expansion back to documents.
     *
@@ -1031,30 +1044,16 @@ object Dedup {
     * choice never changes output bits.
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      tau: Double, maskPathMaxMasks: Int = 32768): DataFrame = {
+      tau: Double): DataFrame = containmentPairs(docs, idCol, textCol, tau, byPrefix = false)
+
+  /** [[containmentPairs]]; `byPrefix` takes the prefix-filter path at any vocabulary. */
+  private[graft] def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double, byPrefix: Boolean): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau out of (0,1]: $tau")
-    val toks = docs.select(col(idCol).as("id"),
-      explode(array_distinct(filter(split(col(textCol), " "),
-        t => t =!= ""))).as("tok"))
-      .localCheckpoint()
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val sizes = toks.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val smallVocab =
-      if (dfreq.count() <= 62) Some(()) else None
-    smallVocab match {
-      case Some(_) =>
-        val masks = toks
-          .join(dfreq.select(col("tok")).orderBy(col("tok"))
-            .withColumn("bit",
-              (row_number().over(Window.orderBy(col("tok"))) - 1)), "tok")
-          .select(col("id"), expr("shiftleft(1L, bit)").as("b"))
-          .groupBy(col("id")).agg(expr("bit_or(b)").as("mask"))
-        val dm = masks.select(col("mask")).distinct()
-          .withColumn("sz", expr("bit_count(mask)"))
-          .localCheckpoint()
-        if (dm.count() <= maskPathMaxMasks) containmentPairsMask(masks, dm, tau)
-        else containmentPairsPrefix(toks, dfreq, sizes, tau)
-      case None => containmentPairsPrefix(toks, dfreq, sizes, tau)
+    val (toks, dfreq, nVocab) = tokenFrames(docs, idCol, textCol)
+    (if (byPrefix) None else bitMasks(toks, dfreq, nVocab)) match {
+      case Some((masks, dm)) => containmentPairsMask(masks, dm, tau)
+      case None => containmentPairsPrefix(toks, dfreq, tau)
     }
   }
 
@@ -1094,7 +1093,8 @@ object Dedup {
     * operator's scaladoc.
     */
   private def containmentPairsPrefix(toks: DataFrame, dfreq: DataFrame,
-      sizes: DataFrame, tau: Double): DataFrame = {
+      tau: Double): DataFrame = {
+    val sizes = toks.groupBy(col("id")).agg(count(lit(1)).as("sz"))
     val ranked = toks.join(dfreq, "tok").join(sizes, "id")
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))))

@@ -29,7 +29,7 @@ object Graph {
     * onto it as a third column (so NO round ever joins degrees again),
     * and the per-round rank frame — exactly one row per node — moves by
     * whichever transport fits: while the node count fits
-    * `broadcastMaxNodes`, rounds broadcast the rank/contribution frames
+    * [[BroadcastMaxNodes]], rounds broadcast the rank/contribution frames
     * against the fused edges (measured fastest on small graphs — a
     * few-hundred-row broadcast build beats a 2-stage shuffle round);
     * past the bound every round's edge⋈rank join carries a shuffle-hash
@@ -49,31 +49,30 @@ object Graph {
     */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, dampingMicros: Long = 850000L,
-      broadcastMaxNodes: Long = 10000000L,
-      symmetric: Boolean = false,
-      windowSetupMaxBytes: Long = 32L << 20): DataFrame = {
+      symmetric: Boolean = false): DataFrame =
+    pageRankFixedPoint(edges, srcCol, dstCol, iterations, dampingMicros, symmetric, None)
+
+  /** Edge-input size estimate up to which [[pageRankFixedPoint]] takes
+    * the out-degree as a count window; node count up to which it
+    * broadcasts degrees and ranks.
+    */
+  private val WindowSetupMaxBytes: Long = 32L << 20
+  private val BroadcastMaxNodes: Long = 10000000L
+
+  /** [[pageRankFixedPoint]]; `large = Some(b)` takes the large-graph
+    * setup at any size, with broadcast (b) or shuffle-hash transport.
+    */
+  private[graft] def pageRankFixedPoint(edges: DataFrame, srcCol: String,
+      dstCol: String, iterations: Int, dampingMicros: Long, symmetric: Boolean,
+      large: Option[Boolean]): DataFrame = {
     require(iterations >= 1, s"iterations must be positive: $iterations")
     require(dampingMicros > 0 && dampingMicros < 1000000L,
       s"dampingMicros out of (0, 1e6): $dampingMicros")
-    // Setup in two bounded materializations. (1) Out-degree as a
-    // partial-aggregating groupBy — |nodes| rows out, and a power-law
-    // hot src collapses map-side instead of streaming its whole edge
-    // set through one task (which is what a count-over-src window
-    // would do: an unbounded-frame window does no partial aggregation
-    // and buffers each src's edges in its sort task). (2) ONE fused
-    // edge checkpoint attaching `od`, so no round ever joins degrees
-    // again. While the node count fits `broadcastMaxNodes` the degree
-    // frame BROADCASTS onto the edges — the edge list is never
-    // shuffled in setup; past the bound the fused checkpoint pays the
-    // one src-hash shuffle via a shuffle-hash join (build side is the
-    // |nodes|-row degrees; the edge side streams through the probe
-    // with no sort and no per-key buffering). Values are identical
-    // (count per src) on both paths, so every round is bit-same.
     val sel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // Setup dispatch on the optimizer's size estimate of the edge input
     // (driver-side, no job). The regimes and their measured/derived
     // rationale:
-    //   - TINY (≤ windowSetupMaxBytes, a data-bytes bound — not a core
+    //   - TINY (≤ WindowSetupMaxBytes, a data-bytes bound — not a core
     //     count): out-degree as a count window over src, ONE setup job
     //     and zero broadcast builds. At this size the whole edge list
     //     fits one task's sort buffer trivially, and job-wave latency
@@ -82,13 +81,15 @@ object Graph {
     //     and runs ~1s slower on a 7.7k-row graph, while at ≫ this
     //     bound the window's single-task src sort is exactly the scale
     //     bug to avoid (unbounded-frame windows do no partial
-    //     aggregation and buffer each src's edge set in one task).
+    //     aggregation and buffer each src's edge set in one task). The
+    //     edge count its checkpoint observed bounds the node count.
     //   - BIG: out-degree via partial-aggregating groupBy (a hot src
     //     collapses map-side, never buffered), materialized once
-    //     (|nodes| rows — its count prices the transport decision),
-    //     then ONE fused edge checkpoint: degrees BROADCAST onto the
-    //     edges while the node count fits `broadcastMaxNodes` (the
-    //     edge list is never shuffled in setup), else a src-keyed
+    //     (|nodes| rows — the count its checkpoint observed prices the
+    //     transport decision), then ONE fused edge checkpoint: degrees
+    //     BROADCAST onto the edges while the node count fits
+    //     [[BroadcastMaxNodes]] (the edge list is never shuffled in
+    //     setup), else a src-keyed
     //     shuffle-hash join (build side = |nodes|-row degrees; the
     //     edge side streams through the probe — no sort, no per-key
     //     buffering). The extra degree job is noise against real work
@@ -96,24 +97,20 @@ object Graph {
     // Both forms compute the identical (src, dst, od) rows, so every
     // round is bit-same regardless of the regime picked.
     val estBytes = sel.queryExecution.optimizedPlan.stats.sizeInBytes
-    val (e, nNodes) =
-      if (estBytes <= windowSetupMaxBytes) {
-        val f = sel.withColumn("od", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-          .localCheckpoint()
-        (f, f.select(col("src")).distinct().count())
-      } else {
-        val od = sel.groupBy(col("src")).agg(count(lit(1)).as("od"))
-          .localCheckpoint()
-        val n = od.count()
-        val f = sel.join(
-            if (n <= broadcastMaxNodes) broadcast(od)
-            else od.hint("shuffle_hash"), Seq("src"))
+    val (e, small) = large match {
+      case None if estBytes <= WindowSetupMaxBytes =>
+        val (f, nEdges) = graft.Util.checkpointCounted(sel.withColumn("od",
+          count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+        (f, nEdges <= BroadcastMaxNodes)
+      case _ =>
+        val (od, n) = graft.Util.checkpointCounted(
+          sel.groupBy(col("src")).agg(count(lit(1)).as("od")))
+        val bc = large.getOrElse(n <= BroadcastMaxNodes)
+        val f = sel.join(if (bc) broadcast(od) else od.hint("shuffle_hash"), Seq("src"))
           .select(col("src"), col("dst"), col("od"))
           .localCheckpoint()
-        (f, n)
-      }
-    val small = nNodes <= broadcastMaxNodes
+        (f, bc)
+    }
     val perNode: DataFrame => DataFrame =
       if (small) broadcast else (df: DataFrame) => df.hint("shuffle_hash")
     // one small materialization, used only by the general path's
@@ -267,6 +264,115 @@ object Graph {
     }
   }
 
+  /** [[pageRankFixedPoint]] for an UNDIRECTED graph given as canonical
+    * (a < b) edge rows, with the same fixed-point integer semantics —
+    * but iterated on the TRUE-TWIN QUOTIENT. Twins (identical closed
+    * neighborhoods — duplicate groups) have equal degree and, by
+    * induction, equal rank at every iteration: they start equal and
+    * their neighbor multisets differ only by swapping equal-ranked
+    * members. So the node-level recurrence collapses exactly onto
+    * classes:
+    *
+    *   od_A  = (m_A − 1) + Σ_{B~A} m_B
+    *   f_X   = r_X div od_X                     (floored ONCE per class,
+    *                                             as every member floors)
+    *   r_A'  = base + d·((m_A−1)·f_A + Σ_{B~A} m_B·f_B) div 10⁶
+    *
+    * — bit-identical to iterating every node, while each round touches
+    * |quotient| rows instead of the full edge list (a dup-corpus clique
+    * is ONE row here). Expansion back to nodes is a map join. Returns
+    * (id, rank_micros) for every node in an edge.
+    *
+    * When to use which: twin detection costs ~one node-level iteration
+    * (it shuffles the closed-neighbor arrays, Σdeg ids). It pays for
+    * itself on exact-dup-dominated graphs (high-τ near-dup sets collapse
+    * 2×+ and iteration becomes ~free) and LOSES on loose graphs where
+    * classes ≈ nodes — q133's τ = 0.8 graph keeps the node-level
+    * [[pageRankFixedPoint]] for exactly that reason.
+    */
+  def pageRankUndirected(edges: DataFrame, aCol: String, bCol: String,
+      iterations: Int = 3, dampingMicros: Long = 850000L): DataFrame = {
+    require(iterations >= 1, s"iterations must be positive: $iterations")
+    require(dampingMicros > 0 && dampingMicros < 1000000L,
+      s"dampingMicros out of (0, 1e6): $dampingMicros")
+    val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
+      .localCheckpoint()
+    val (n2c, qsz, qe, _) = twinQuotient(e)
+    val qdir = qe.select(col("qa").as("cid"), col("qb").as("nbr"))
+      .unionAll(qe.select(col("qb").as("cid"), col("qa").as("nbr")))
+      .localCheckpoint()
+    // class degree: in-class twins + all members of adjacent classes
+    val qdeg = qsz
+      .join(qdir.join(qsz.select(col("cid").as("nbr"), col("m").as("mn")), "nbr")
+          .groupBy(col("cid")).agg(sum(col("mn")).as("ext")),
+        Seq("cid"), "left")
+      .select(col("cid"), col("m"),
+        (col("m") - 1 + coalesce(col("ext"), lit(0L))).as("od"))
+      .localCheckpoint()
+    val baseMicros = 1000000L - dampingMicros
+    var ranks = qdeg.select(col("cid"), lit(1000000L).as("r"))
+    (1 to iterations).foreach { _ =>
+      val f = ranks.join(broadcast(qdeg), "cid")
+        .select(col("cid"), col("m"), expr("r div od").as("f"))
+      val ext = qdir
+        .join(broadcast(f.select(col("cid").as("nbr"), col("m").as("mn"),
+          col("f").as("fn"))), "nbr")
+        .groupBy(col("cid")).agg(sum(col("mn") * col("fn")).as("c"))
+      ranks = f.join(broadcast(ext), Seq("cid"), "left")
+        .select(col("cid"), expr(
+          s"$baseMicros + ($dampingMicros * ((m - 1) * f + coalesce(c, 0L))) div 1000000")
+          .as("r"))
+    }
+    ranks.join(n2c, "cid")
+      .select(col("v").as("id"), col("r").as("rank_micros"))
+  }
+
+  /** True-twin quotient of an undirected graph given as canonical
+    * (a < b) edge rows: nodes with identical CLOSED neighborhoods —
+    * provably pairwise adjacent with identical external edges, the exact
+    * structure duplicate groups produce — collapse into one class.
+    * Returns (node → class map, class sizes, canonical deduped quotient
+    * edges), each localCheckpoint'd, and the quotient edge count that
+    * its checkpoint observed. Detection groups on the literal
+    * sorted neighbor array (exact, no hash-collision risk); total
+    * shuffled volume is Σdeg = 2|E|, linear in the edge list.
+    */
+  private def twinQuotient(e: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
+    import org.apache.spark.sql.expressions.Window
+    val und = e.select(col("a").as("v"), col("b").as("w"))
+      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
+    val closed = und.groupBy(col("v"))
+      .agg(sort_array(array_union(collect_list(col("w")), array(col("v"))))
+        .as("nb"))
+    // class id = smallest member; one shuffle keyed by the array itself
+    val n2c = closed
+      .select(col("v"), min(col("v")).over(Window.partitionBy(col("nb")))
+        .as("cid"))
+      .localCheckpoint()
+    // class sizes and quotient edges both derive from the materialized
+    // class map and are independent of each other — materialize the two
+    // concurrently (bounded jobPool leaves) instead of as two
+    // sequential jobs. (Measured this round: leaving qsz lazy instead
+    // re-derives its agg once per consumer reference inside the final
+    // job and benches ~30% WORSE on the topology card — the
+    // materialization is off the critical path here, the recomputes
+    // are not.)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext = graft.Util.jobPool
+    val fQsz = Future(n2c.groupBy(col("cid")).agg(count(lit(1)).as("m"))
+      .localCheckpoint())
+    val fQe = Future(graft.Util.checkpointCounted(e
+      .join(n2c.select(col("v").as("a"), col("cid").as("ca")), "a")
+      .join(n2c.select(col("v").as("b"), col("cid").as("cb")), "b")
+      .filter(col("ca") =!= col("cb"))
+      .select(least(col("ca"), col("cb")).as("qa"),
+        greatest(col("ca"), col("cb")).as("qb"))
+      .distinct()))
+    val (qe, nQe) = Await.result(fQe, Duration.Inf)
+    (n2c, Await.result(fQsz, Duration.Inf), qe, nQe)
+  }
+
   /** Per-node triangle counts over an UNDIRECTED graph given as
     * canonical (a < b) edge rows — the local clustering signal that
     * separates "sits inside a duplication clique" from "bridges two
@@ -303,130 +409,28 @@ object Graph {
     * (x,y),(y,z) closed by (x,z)); on a clique-heavy graph each clique
     * contracts to ONE quotient node and the cubic wedge volume
     * disappears. Quotient self-joins broadcast their build sides while
-    * the quotient edge list fits (≤ `broadcastMaxEdges`; it is
-    * localCheckpoint'd so the count is free and the three plan
-    * references don't re-derive it). Returns (id, n_triangles) for
+    * the quotient edge list fits ([[BroadcastMaxEdges]], checked against
+    * the count its checkpoint observed; the checkpoint keeps the three
+    * plan references from re-deriving it). Returns (id, n_triangles) for
     * nodes in ≥ 1 triangle.
     */
-  /** [[pageRankFixedPoint]] for an UNDIRECTED graph given as canonical
-    * (a < b) edge rows, with the same fixed-point integer semantics —
-    * but iterated on the TRUE-TWIN QUOTIENT. Twins (identical closed
-    * neighborhoods — duplicate groups) have equal degree and, by
-    * induction, equal rank at every iteration: they start equal and
-    * their neighbor multisets differ only by swapping equal-ranked
-    * members. So the node-level recurrence collapses exactly onto
-    * classes:
-    *
-    *   od_A  = (m_A − 1) + Σ_{B~A} m_B
-    *   f_X   = r_X div od_X                     (floored ONCE per class,
-    *                                             as every member floors)
-    *   r_A'  = base + d·((m_A−1)·f_A + Σ_{B~A} m_B·f_B) div 10⁶
-    *
-    * — bit-identical to iterating every node, while each round touches
-    * |quotient| rows instead of the full edge list (a dup-corpus clique
-    * is ONE row here). Expansion back to nodes is a map join. Returns
-    * (id, rank_micros) for every node in an edge.
-    *
-    * When to use which: twin detection costs ~one node-level iteration
-    * (it shuffles the closed-neighbor arrays, Σdeg ids). It pays for
-    * itself on exact-dup-dominated graphs (high-τ near-dup sets collapse
-    * 2×+ and iteration becomes ~free) and LOSES on loose graphs where
-    * classes ≈ nodes — q133's τ = 0.8 graph keeps the node-level
-    * [[pageRankFixedPoint]] for exactly that reason.
-    */
-  def pageRankUndirected(edges: DataFrame, aCol: String, bCol: String,
-      iterations: Int = 3, dampingMicros: Long = 850000L): DataFrame = {
-    require(iterations >= 1, s"iterations must be positive: $iterations")
-    require(dampingMicros > 0 && dampingMicros < 1000000L,
-      s"dampingMicros out of (0, 1e6): $dampingMicros")
-    val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .localCheckpoint()
-    val (n2c, qsz, qe) = twinQuotient(e)
-    val qdir = qe.select(col("qa").as("cid"), col("qb").as("nbr"))
-      .unionAll(qe.select(col("qb").as("cid"), col("qa").as("nbr")))
-      .localCheckpoint()
-    // class degree: in-class twins + all members of adjacent classes
-    val qdeg = qsz
-      .join(qdir.join(qsz.select(col("cid").as("nbr"), col("m").as("mn")), "nbr")
-          .groupBy(col("cid")).agg(sum(col("mn")).as("ext")),
-        Seq("cid"), "left")
-      .select(col("cid"), col("m"),
-        (col("m") - 1 + coalesce(col("ext"), lit(0L))).as("od"))
-      .localCheckpoint()
-    val baseMicros = 1000000L - dampingMicros
-    var ranks = qdeg.select(col("cid"), lit(1000000L).as("r"))
-    (1 to iterations).foreach { _ =>
-      val f = ranks.join(broadcast(qdeg), "cid")
-        .select(col("cid"), col("m"), expr("r div od").as("f"))
-      val ext = qdir
-        .join(broadcast(f.select(col("cid").as("nbr"), col("m").as("mn"),
-          col("f").as("fn"))), "nbr")
-        .groupBy(col("cid")).agg(sum(col("mn") * col("fn")).as("c"))
-      ranks = f.join(broadcast(ext), Seq("cid"), "left")
-        .select(col("cid"), expr(
-          s"$baseMicros + ($dampingMicros * ((m - 1) * f + coalesce(c, 0L))) div 1000000")
-          .as("r"))
-    }
-    ranks.join(n2c, "cid")
-      .select(col("v").as("id"), col("r").as("rank_micros"))
-  }
+  def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    triangleCounts(edges, aCol, bCol, None)
 
-  /** True-twin quotient of an undirected graph given as canonical
-    * (a < b) edge rows: nodes with identical CLOSED neighborhoods —
-    * provably pairwise adjacent with identical external edges, the exact
-    * structure duplicate groups produce — collapse into one class.
-    * Returns (node → class map, class sizes, canonical deduped quotient
-    * edges), each localCheckpoint'd. Detection groups on the literal
-    * sorted neighbor array (exact, no hash-collision risk); total
-    * shuffled volume is Σdeg = 2|E|, linear in the edge list.
+  /** [[triangleCounts]]; `broadcastQuotient = Some(b)` fixes whether the
+    * quotient self-joins broadcast.
     */
-  private def twinQuotient(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val und = e.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("w")))
-    val closed = und.groupBy(col("v"))
-      .agg(sort_array(array_union(collect_list(col("w")), array(col("v"))))
-        .as("nb"))
-    // class id = smallest member; one shuffle keyed by the array itself
-    val n2c = closed
-      .select(col("v"), min(col("v")).over(Window.partitionBy(col("nb")))
-        .as("cid"))
-      .localCheckpoint()
-    // class sizes and quotient edges both derive from the materialized
-    // class map and are independent of each other — materialize the two
-    // concurrently instead of as two sequential jobs
-    // class sizes and quotient edges both derive from the materialized
-    // class map and are independent of each other — materialize the two
-    // concurrently (bounded jobPool leaves) instead of as two
-    // sequential jobs. (Measured this round: leaving qsz lazy instead
-    // re-derives its agg once per consumer reference inside the final
-    // job and benches ~30% WORSE on the topology card — the
-    // materialization is off the critical path here, the recomputes
-    // are not.)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Util.jobPool
-    val fQsz = Future(n2c.groupBy(col("cid")).agg(count(lit(1)).as("m"))
-      .localCheckpoint())
-    val fQe = Future(e
-      .join(n2c.select(col("v").as("a"), col("cid").as("ca")), "a")
-      .join(n2c.select(col("v").as("b"), col("cid").as("cb")), "b")
-      .filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("qa"),
-        greatest(col("ca"), col("cb")).as("qb"))
-      .distinct()
-      .localCheckpoint())
-    (n2c, Await.result(fQsz, Duration.Inf), Await.result(fQe, Duration.Inf))
-  }
-
-  def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
-      broadcastMaxEdges: Long = 8000000L): DataFrame =
+  private[graft] def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
+      broadcastQuotient: Option[Boolean]): DataFrame =
     materializedTriangleCounts(
-      edges.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint(), broadcastMaxEdges)
+      edges.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint(), broadcastQuotient)
+
+  private val BroadcastMaxEdges: Long = 8000000L
 
   /** [[triangleCounts]] of an already materialized (a, b) edge frame. */
-  private def materializedTriangleCounts(e: DataFrame, broadcastMaxEdges: Long): DataFrame = {
-    val (n2c, qsz, qe) = twinQuotient(e)
+  private def materializedTriangleCounts(e: DataFrame,
+      broadcastQuotient: Option[Boolean] = None): DataFrame = {
+    val (n2c, qsz, qe, nQe) = twinQuotient(e)
     val qszB = broadcast(qsz)
     // within-class triangles: C(m-1, 2) per member
     val t1 = qsz.select(col("cid"),
@@ -443,7 +447,7 @@ object Graph {
         expr("(my * (my - 1)) div 2")).as("t"))
     // quotient triangles: oriented enumeration, weighted by the two
     // OTHER classes' multiplicities
-    val qeb = if (qe.count() <= broadcastMaxEdges) broadcast(qe) else qe
+    val qeb = if (broadcastQuotient.getOrElse(nQe <= BroadcastMaxEdges)) broadcast(qe) else qe
     val qtri = qe.as("e1")
       .join(qeb.as("e2"), col("e1.qb") === col("e2.qa"))
       .join(qeb.as("e3"),
@@ -497,7 +501,7 @@ object Graph {
           .withColumnRenamed("d", "d_dst"), Seq("dst"))
       .agg(sum(col("d_src").cast(dec) * col("d_dst").cast(dec)).as("sxy"),
         count(lit(1)).as("m2"))
-    val triAgg = materializedTriangleCounts(pairs.toDF("a", "b"), 8000000L)
+    val triAgg = materializedTriangleCounts(pairs.toDF("a", "b"))
       .agg((sum(col("n_triangles")) / 3).cast("long").as("n_triangles"))
       .select(coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
     val num = (col("m2").cast(dec) * col("sxy")) - (col("s1e") * col("s1e"))
@@ -569,24 +573,26 @@ object Graph {
       maxItemDegree: Int = 1000, packIds: Boolean = false): DataFrame = {
     // ONE item-keyed exchange feeds everything downstream (§2.4):
     // after the dedup shuffle, an explicit repartition(item) is the
-    // shared layout that (a) the degree aggregate folds on with no
-    // further exchange (hash(item) clusters the group key), (b) the
-    // weight join attaches on co-partitioned (shuffle-hash, build =
-    // |items|-per-partition degrees), and (c) BOTH sides of the pair
+    // shared layout that (a) the degree folds on as a count window over
+    // item, with no further exchange and no join to attach it (an
+    // aggregate-then-join fold let the optimizer drop the repartition
+    // under the aggregate, so the fold scanned and shuffled the
+    // membership a second time), and (b) BOTH sides of the pair
     // self-join consume via ReuseExchange — so the membership is never
-    // re-shuffled for the join that used to reshuffle two checkpoint
-    // reads by item. The previous eager localCheckpoint (a blocking
-    // materialization job) is gone; the exchange itself is the reuse
-    // point. Hot-item exposure is unchanged (the same item-keyed
-    // shuffle existed before, post-checkpoint) and remains bounded by
-    // `maxItemDegree` for everything past the degree fold.
+    // re-shuffled for the join. The exchange itself is the reuse point;
+    // no eager materialization job. The window buffers each item's
+    // members (spillable); everything past the degree fold is bounded
+    // by `maxItemDegree`.
     val m = membership
       .select(col(idCol).as("id"), col(itemCol).as("item")).distinct()
       .repartition(col("item"))
-    val deg = m.groupBy(col("item")).agg(count(lit(1)).as("deg"))
+    // a null item pairs with nothing; dropping it here also gives the
+    // guard subquery below the pair join's exchange, so it reuses it
+    val mw = m.filter(col("item").isNotNull)
+      .withColumn("deg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("item"))))
       .filter(col("deg") >= 2 && col("deg") <= maxItemDegree)
       .withColumn("w_e6", round(lit(1e6) / log(col("deg"))).cast("long"))
-    val mw = m.join(deg.hint("shuffle_hash"), "item")
     val joined = mw.select(col("item"), col("id").as("id_a"), col("w_e6"))
       .join(mw.select(col("item"), col("id").as("id_b")).hint("shuffle_hash"),
         Seq("item"))

@@ -374,9 +374,8 @@ object DedupOps {
     * union-find pass — a single narrow job, no driver collect, no
     * per-iteration scheduling latency. (Join-iterated min-label
     * propagation measured 10–100× slower here: each propagation round is
-    * a full Spark job over a tiny frame.) Past the
-    * [[graft.api.Dedup.CcCutoverEdges]] edge count the same call switches
-    * to the iterative large-star/small-star contraction, which never
+    * a full Spark job over a tiny frame.) Past its edge-count cutover
+    * the same call switches to the iterative large-star/small-star contraction, which never
     * funnels the edge set through one task — both paths produce
     * identical components (parity-tested in ApiSpec). Oracle:
     * recursive-CTE transitive closure.
@@ -570,14 +569,9 @@ object DedupOps {
     * how many of its 4-word shingles appear anywhere in the "benchmark"
     * slice (doc_id % 25 = 0); contaminated docs only. Plan shape on
     * [[graft.api.Dedup.decontaminationStats]]'s adaptive gate: this
-    * suite sits under [[graft.api.Dedup.BroadcastSuiteCutover]], so its
-    * distinct shingle strings broadcast straight into the exact join —
-    * no Bloom build/probe cost (PlanSpec locks the gate's absence here
-    * and its presence when the cutover is forced to 0: above the
-    * cutover a broadcast Bloom filter gates the corpus shingles via
-    * `might_contain`, and only Bloom hits — true leaks plus ~1% false
-    * positives — reach the exact join, bounding the suite at ~10
-    * bits/shingle rather than the strings).
+    * suite sits under its broadcast cutover, so its distinct shingle
+    * strings broadcast straight into the exact join (PlanSpec locks the
+    * Bloom gate's absence here and its presence when it is forced).
     */
   def q85Decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -167,31 +167,23 @@ object StreamOps {
   /** SIZE-BOUNDED streaming decontamination — the scale path when the
     * contamination suite outgrows [[decontaminationFilter]]'s broadcast
     * shingle array (many benchmarks × 8-grams). Each micro-batch runs
-    * [[graft.api.Dedup.decontaminationDrop]]: above the measured
-    * suite-size cutover a broadcast BLOOM filter (~10 bits per benchmark
-    * shingle instead of the strings themselves) pre-gates the batch's
-    * shingles, only Bloom hits reach the exact shingle join
-    * (planner-chosen strategy — broadcast when small, shuffle when not),
-    * and the confirmed-contaminated doc ids anti-join the batch; at or
-    * below the cutover the suite's shingle strings broadcast straight
-    * into the exact join (no gate to pay for). Bloom false positives cost a verify-join row, never a
-    * dropped clean document. Runs inside foreachBatch (where the
-    * relational anti-join is legal on the batch frame) and re-loads the
-    * benchmark per batch — the [[decontaminationFilterRefreshing]]
-    * contract, so a republished suite starts filtering from the next
-    * micro-batch with no restart.
+    * [[graft.api.Dedup.decontaminationDrop]]: above its suite-size
+    * cutover a broadcast BLOOM filter pre-gates the batch's shingles and
+    * only Bloom hits reach the exact shingle join; the
+    * confirmed-contaminated doc ids anti-join the batch. Bloom false
+    * positives cost a verify-join row, never a dropped clean document.
+    * Runs inside foreachBatch (where the relational anti-join is legal on
+    * the batch frame) and re-loads the benchmark per batch — the
+    * [[decontaminationFilterRefreshing]] contract, so a republished suite
+    * starts filtering from the next micro-batch with no restart.
     */
   def decontaminationFilterBloom(docs: DataFrame,
       loadBenchmark: SparkSession => DataFrame,
-      idCol: String, textCol: String, n: Int = 4,
-      bloomItems: Long = 1000000L, bloomBits: Long = 0L,
-      broadcastCutover: Long = graft.api.Dedup.BroadcastSuiteCutover)(
+      idCol: String, textCol: String, n: Int = 4)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
       val bench = loadBenchmark(batch.sparkSession)
-      sink(graft.api.Dedup.decontaminationDrop(
-        batch, bench, idCol, textCol, n, bloomItems, bloomBits,
-        broadcastCutover), batchId)
+      sink(graft.api.Dedup.decontaminationDrop(batch, bench, idCol, textCol, n), batchId)
     }
 
   /** Streaming twin of [[graft.api.Stats]]: each micro-batch appends its

@@ -153,6 +153,49 @@ class UtilSpec extends SparkSpec {
     assert(sums === (1 to 4).map(p => (1 to 8).map(p * 100 + _).sum))
   }
 
+  test("fan-out pool tasks run under their submitter's job group") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    val rec = new Profile.Recorder(spark)
+    try {
+      // every jobPool thread busy under group A, so each one exists and
+      // has run work submitted under A
+      sc.setJobGroup("group-a", "occupier")
+      val busy = new java.util.concurrent.CountDownLatch(4)
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val occupiers = (1 to 4).map(_ => Future { busy.countDown(); release.await() }(Util.jobPool))
+      assert(busy.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      release.countDown()
+      occupiers.foreach(Await.result(_, 30.seconds))
+      sc.setJobGroup("group-b", "submitter")
+      rec.phase("b")(Await.result(Future(spark.range(10).count())(Util.jobPool), 60.seconds))
+      val groups = rec.jobs("b").map(_.getProperty("spark.jobGroup.id"))
+      assert(groups.nonEmpty && groups.forall(_ == "group-b"), groups)
+      // the pool thread's own properties come back after the task
+      sc.clearJobGroup()
+      val own = Future(sc.getLocalProperty("spark.jobGroup.id"))(
+        scala.concurrent.ExecutionContext.fromExecutor(Util.jobExecutor))
+      assert(Await.result(own, 30.seconds) != "group-b")
+    } finally {
+      sc.clearJobGroup()
+      rec.close()
+    }
+  }
+
+  test("checkpointCounted: the row count comes with the checkpoint's own jobs") {
+    import spark.implicits._
+    val df = spark.range(0, 1000, 1, 4).filter($"id" % 3 === 0).groupBy($"id" % 97).count()
+    val rec = new Profile.Recorder(spark)
+    try {
+      val (cp, n) = rec.phase("counted")(Util.checkpointCounted(df))
+      rec.phase("plain")(df.localCheckpoint())
+      assert(n === 97)
+      assert(rec.jobs("counted").size === rec.jobs("plain").size)
+      assert(cp.count() === 97)
+    } finally rec.close()
+  }
+
   test("bloomBytes restores the bloom size clamps after a normal return and after a failure") {
     import spark.implicits._
     val keys = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
@@ -193,8 +236,8 @@ class UtilSpec extends SparkSpec {
     try {
       keys.foreach(spark.conf.unset)
       // 10M items, 80M bits: above both default clamps, on the Bloom path
-      val hits = graft.api.Dedup.decontaminationStats(corpus, suite, "k", "body",
-          bloomItems = 10000000L, broadcastCutover = 0L)
+      val hits = graft.api.Dedup.decontaminationStats(corpus, suite, "k", "body", 4,
+          _ => Some((10000000L, 80000000L)))
         .select($"k").as[Long].collect().toSeq
       assert(hits === Seq(1L))
       assert(setKeys === Nil, "decontaminationStats left a clamp key set")

@@ -39,8 +39,8 @@ class ApiSpec extends SparkSpec {
 
   test("clusterComponents: star-contraction path matches union-find on a multi-component graph") {
     import spark.implicits._
-    // deterministic multi-component graph big enough to cross a small
-    // cutover: 10 blocks of 300 node ids, ~150 random intra-block edges
+    // deterministic multi-component graph for several contraction
+    // rounds: 10 blocks of 300 node ids, ~150 random intra-block edges
     // each (several components per block), plus a 50-node chain (deep
     // component) and a self-loop (singleton via the iterative path's
     // node re-join)
@@ -55,11 +55,11 @@ class ApiSpec extends SparkSpec {
     val chain = (0 until 50).map(i => (20000L + i, 20000L + i + 1))
     val edges = (blockEdges ++ chain :+ ((30000L, 30000L)))
       .toDF("id_a", "id_b")
-    assert(edges.count() > 1000) // crosses the forced cutover below
-    val viaUnionFind = Dedup.clusterComponents(edges, cutoverEdges = Long.MaxValue)
+    assert(edges.count() > 1000)
+    val viaUnionFind = Dedup.clusterComponents(edges) // under the edge cutover
       .select($"id", $"cluster", $"cluster_size", $"is_keeper")
       .as[(Long, Long, Long, Boolean)].collect().toSet
-    val viaStars = Dedup.clusterComponents(edges, cutoverEdges = 1000L)
+    val viaStars = Dedup.clusterComponents(edges, byStars = true)
       .select($"id", $"cluster", $"cluster_size", $"is_keeper")
       .as[(Long, Long, Long, Boolean)].collect().toSet
     assert(viaStars === viaUnionFind)
@@ -73,15 +73,16 @@ class ApiSpec extends SparkSpec {
   test("q55 cluster pipeline is identical through the forced iterative CC path") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    def run(cutover: Long) = Dedup.cacheScope {
-      val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text")
-        .filter($"jaccard" >= 0.5).select($"id_a", $"id_b")
-      Dedup.clusterComponents(pairs, cutoverEdges = cutover)
-        .select($"id", $"cluster", $"cluster_size", $"is_keeper")
-        .as[(Long, Long, Long, Boolean)].collect().toSet
-    }
-    val sparse = run(Long.MaxValue) // union-find path
-    val iter = run(0L)              // star-contraction path
+    def run(components: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      Dedup.cacheScope {
+        val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text")
+          .filter($"jaccard" >= 0.5).select($"id_a", $"id_b")
+        components(pairs)
+          .select($"id", $"cluster", $"cluster_size", $"is_keeper")
+          .as[(Long, Long, Long, Boolean)].collect().toSet
+      }
+    val sparse = run(Dedup.clusterComponents(_))               // union-find path
+    val iter = run(Dedup.clusterComponents(_, byStars = true)) // star-contraction path
     assert(sparse.nonEmpty)
     assert(iter === sparse)
   }
@@ -205,14 +206,14 @@ class ApiSpec extends SparkSpec {
     assert(stats(1L)._3 === 2L)
     // a suite-scale filter request (80M bits > Spark's 67M-bit default
     // clamp) must plan — bloomGated raises the optimizer confs — and
-    // return identical results; broadcastCutover=0 forces the Bloom path
-    // (the adaptive gate would broadcast a 5-shingle suite)
+    // return identical results; a gate that always answers Bloom forces
+    // that path (the adaptive gate would broadcast a 5-shingle suite)
     val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val priorItems = spark.conf.get(itemsKey)
     val priorBits = spark.conf.get(bitsKey)
-    val bigBloom = Dedup.decontaminationStats(corpus, benchmark, "k", "body",
-        bloomItems = 10000000L, broadcastCutover = 0L)
+    val bigBloom = Dedup.decontaminationStats(corpus, benchmark, "k", "body", 4,
+        _ => Some((10000000L, 80000000L)))
       .select($"k", $"n_contaminated").as[(Long, Long)].collect().toMap
     assert(bigBloom === Map(1L -> 2L, 3L -> 5L))
     // the oversized call must not permanently re-size the session's
@@ -225,8 +226,8 @@ class ApiSpec extends SparkSpec {
     // and the drop composition over the forced-Bloom path still works
     // AFTER the restore (the predicate was analyzed under the raised
     // clamps; later Dataset compositions must not re-trip them)
-    val dropped = Dedup.decontaminationDrop(corpus, benchmark, "k", "body",
-        bloomItems = 10000000L, broadcastCutover = 0L)
+    val dropped = Dedup.decontaminationDrop(corpus, benchmark, "k", "body", 4,
+        _ => Some((10000000L, 80000000L)))
       .orderBy($"k").select($"k").as[Long].collect().toSeq
     assert(dropped === Seq(2L), "only the clean doc survives the drop")
     assert(spark.conf.get(itemsKey) === priorItems)
@@ -242,14 +243,13 @@ class ApiSpec extends SparkSpec {
       (2L, "totally clean document with no benchmark overlap at all today"),
       (3L, "alpha beta gamma delta epsilon zeta eta theta")
     ).toDF("k", "body")
-    def run(cutover: Long) =
-      Dedup.decontaminationStats(corpus, benchmark, "k", "body",
-          broadcastCutover = cutover)
+    def run(gate: Dedup.ShingleGate) =
+      Dedup.decontaminationStats(corpus, benchmark, "k", "body", 4, gate)
         .orderBy($"k")
         .as[(Long, Long, Long, Double)].collect().toSeq
-    // Long.MaxValue pins the broadcast path, 0 pins the Bloom path — the
-    // adaptive default must be a pure plan choice, never a result change
-    assert(run(Long.MaxValue) === run(0L))
+    // None pins the broadcast path, a 1M-item filter the Bloom path —
+    // the adaptive choice must be a pure plan choice, never a result change
+    assert(run(_ => None) === run(_ => Some((1000000L, 8000000L))))
   }
 
   test("dupNgramFrac measures within-document repetition exactly") {

@@ -151,7 +151,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("ppJoinPairs: bitmask and prefix-filter strategies agree bit-for-bit") {
     import spark.implicits._
     // 31-token harness vocab -> the adaptive operator takes the mask
-    // path; maskPathMaxMasks=0 forces the same corpus down the prefix
+    // path; byPrefix = true runs the same corpus down the prefix
     // path. Output (incl. the float jaccard) must be identical.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -159,7 +159,7 @@ class DedupSimilaritySpec extends SparkSpec {
         r.getDouble(3))).toSet
     val mask = rows(graft.api.Dedup.ppJoinPairs(docs, "doc_id", "text", 0.8))
     val prefix = rows(graft.api.Dedup.ppJoinPairs(docs, "doc_id", "text", 0.8,
-      maskPathMaxMasks = 0))
+      byPrefix = true))
     assert(mask === prefix)
     assert(mask.nonEmpty, "degenerate test: no qualifying pairs at tau=0.8")
     // a >62-token vocabulary routes to the prefix path on its own and
@@ -198,7 +198,7 @@ class DedupSimilaritySpec extends SparkSpec {
         r.getDouble(3))).toSet
     val mask = rows(graft.api.Dedup.containmentPairs(docs, "doc_id", "text", 0.95))
     val prefix = rows(graft.api.Dedup.containmentPairs(docs, "doc_id", "text", 0.95,
-      maskPathMaxMasks = 0))
+      byPrefix = true))
     assert(mask === prefix)
     assert(mask.nonEmpty, "degenerate test: no qualifying pairs at tau=0.95")
     // >62-token vocabulary routes to the prefix path on its own; brute force
@@ -354,6 +354,71 @@ class DedupSimilaritySpec extends SparkSpec {
     val want = graft.api.Graph.pageRankFixedPoint(edges, "src", "dst", iterations = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)
+  }
+
+  /** A seeded directed graph with sinks and sources, and its both-directions twin. */
+  private def rankGraphs() = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val directed = (0 until 300).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val und = directed.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
+    (directed.toDF("src", "dst"), und.toDF("src", "dst"))
+  }
+
+  private def rankMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("pageRankFixedPoint: the large-graph setup with broadcast degrees equals the small-graph path") {
+    val (directed, und) = rankGraphs()
+    for ((edges, symmetric) <- Seq(directed -> false, und -> true)) {
+      val small = rankMap(graft.api.Graph.pageRankFixedPoint(edges, "src", "dst",
+        iterations = 4, symmetric = symmetric))
+      val large = rankMap(graft.api.Graph.pageRankFixedPoint(edges, "src", "dst",
+        4, 850000L, symmetric, large = Some(true)))
+      assert(small.size > 50)
+      assert(large === small, s"symmetric = $symmetric")
+    }
+  }
+
+  test("pageRankFixedPoint: the large-graph setup with shuffle-hash degrees equals the small-graph path") {
+    val (directed, _) = rankGraphs()
+    val small = rankMap(graft.api.Graph.pageRankFixedPoint(directed, "src", "dst", iterations = 4))
+    val large = rankMap(graft.api.Graph.pageRankFixedPoint(directed, "src", "dst",
+      4, 850000L, symmetric = false, large = Some(false)))
+    assert(large === small)
+  }
+
+  test("pageRankFixedPoint: shuffle-hash round transport equals the broadcast rounds") {
+    val (_, und) = rankGraphs()
+    val small = rankMap(graft.api.Graph.pageRankFixedPoint(und, "src", "dst",
+      iterations = 4, symmetric = true))
+    val df = graft.api.Graph.pageRankFixedPoint(und, "src", "dst",
+      4, 850000L, symmetric = true, large = Some(false))
+    // every round's rank join is a shuffle-hash join, none broadcasts
+    val nodes = graft.Profile.fingerprint(df.queryExecution.executedPlan)
+    assert(nodes.getOrElse("ShuffledHashJoin", 0) === 3, nodes)
+    assert(!nodes.contains("BroadcastHashJoin"), nodes)
+    assert(rankMap(df) === small)
+  }
+
+  test("triangleCounts: unbroadcast quotient self-joins equal the broadcast ones") {
+    import spark.implicits._
+    // the clique-heavy graph above, plus seeded random edges among fresh
+    // nodes so that the quotient holds triangles of its own
+    val k6 = for (a <- 1L to 6L; b <- (a + 1) to 6L) yield (a, b)
+    val k4 = for (a <- 11L to 14L; b <- (a + 1) to 14L) yield (a, b)
+    val rnd = new scala.util.Random(5)
+    val loose = (0 until 120).map(_ => (100L + rnd.nextInt(30), 100L + rnd.nextInt(30)))
+      .collect { case (a, b) if a < b => (a, b) }
+    val edges = (k6 ++ k4 ++ Seq((6L, 11L), (6L, 12L), (21L, 22L), (22L, 23L),
+      (23L, 24L), (21L, 24L), (21L, 23L)) ++ loose).distinct.toDF("id_a", "id_b")
+    def tri(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaBroadcast = tri(graft.api.Graph.triangleCounts(edges, "id_a", "id_b"))
+    val unbroadcast = graft.api.Graph.triangleCounts(edges, "id_a", "id_b", Some(false))
+    assert(viaBroadcast.size > 20)
+    assert(tri(unbroadcast) === viaBroadcast)
   }
 
   test("q133: fixed-point PageRank matches an integer reference; hubs outrank leaves") {

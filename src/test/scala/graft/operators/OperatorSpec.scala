@@ -173,17 +173,4 @@ class OperatorSpec extends SparkSpec {
       assert(r.getAs[Long]("n_outliers") === nOut, s"outliers($t)")
     }
   }
-
-  test("q292: Bloom-gated audit path is bit-identical to the broadcast path") {
-    // r13 optimization: above the broadcast cutover the collision audit
-    // pre-filters draws through a Bloom over the positives' packed key
-    // (guide §3.2). Bloom false positives only cost join rows — the
-    // exact join decides them — and false negatives are impossible, so
-    // both paths must agree exactly. cutover=0 forces the Bloom branch.
-    val viaBloom =
-      Relational.q292NegativeSampling(spark, sf, 0L).collect().toSeq
-    val viaBroadcast =
-      Relational.q292NegativeSampling(spark, sf).collect().toSeq
-    assert(viaBloom === viaBroadcast)
-  }
 }

@@ -355,13 +355,13 @@ class PlanSpec extends SparkSpec {
 
   test("decontamination above the cutover: Bloom gate sits before the exact shingle join (suite size bound is bits, not strings)") {
     // q85's sf-test suite sits under the broadcast cutover, so the Bloom
-    // shape is locked by forcing the cutover to 0 over the same tables —
+    // shape is locked by forcing the Bloom gate over the same tables —
     // the plan a many-benchmark 8-gram suite would get
     import spark.implicits._
     val all = spark.read.parquet(s"$sf/documents.parquet")
     val p = planOf(graft.api.Dedup.decontaminationStats(
       all.filter($"doc_id" % 25 =!= 0), all.filter($"doc_id" % 25 === 0),
-      "doc_id", "text", broadcastCutover = 0L))
+      "doc_id", "text", 4, _ => Some((1000000L, 8000000L))))
     assert(p.contains("might_contain"),
       s"corpus shingles must probe the broadcast Bloom filter:\n$p")
     // the filter BUILD must not sit in the submitted plan: it runs once

@@ -188,16 +188,17 @@ class StreamOpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(benchDir)
     val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
     val mem = MemoryStream[Doc](spark)
-    // bloomBits=2: a 2-bit filter over 5 benchmark shingles saturates —
+    // the operator's micro-batch body through the forced Bloom gate: a
+    // 2-bit filter over 5 benchmark shingles saturates —
     // essentially EVERY probe is a Bloom hit (forced false positives),
     // so the exact verify join is doing all the work; a clean doc
     // surviving proves a false positive can never drop a document
-    val q = StreamOps.decontaminationFilterBloom(
-        mem.toDF(), s => s.read.parquet(benchDir), "doc_id", "text",
-        bloomItems = 5L, bloomBits = 2L, broadcastCutover = 0L) {
-      (batch, _) => kept.synchronized {
-        kept ++= batch.select($"doc_id").as[Long].collect()
-      }
+    val q = mem.toDF().writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val dropped = graft.api.Dedup.decontaminationDrop(batch,
+          batch.sparkSession.read.parquet(benchDir), "doc_id", "text", 4, _ => Some((5L, 2L)))
+        kept.synchronized { kept ++= dropped.select($"doc_id").as[Long].collect() }
+        ()
     }.start()
     mem.addData(
       Doc(t(1), 1, "alpha beta gamma delta epsilon unrelated tail words here"), // true leak
