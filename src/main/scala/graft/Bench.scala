@@ -50,13 +50,7 @@ object Bench {
     // cpu count (the sentinel is a fixed-size job: wall ~ 1/cpus) so a
     // healthy low-cpu run isn't permanently stamped degraded
     val sentinelRef = 0.12 * 32.0 / cpus.toDouble
-    def sentinelOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
-        .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h") // long sum overflows under ANSI
-        .agg(org.apache.spark.sql.functions.sum("h")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def sentinelOnce(): Double = SparkEntry.sentinel(spark, 200000000L)
     def sentinel(): Double = Seq(sentinelOnce(), sentinelOnce(), sentinelOnce()).min
     // untimed warmup of the sentinel's own generated code — without it the
     // pre-suite probe reads ~2x slow from JIT, eating the detection margin
@@ -72,13 +66,7 @@ object Bench {
     // scheduling/collect overhead, so the kernel does not scale linearly
     // with row count — 50M rows ≈ 0.03 s compute + ~0.05 s overhead)
     val microRef = 0.078 * 32.0 / cpus.toDouble
-    def microOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 50000000L, 1L, cpus.toInt)
-        .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h")
-        .agg(org.apache.spark.sql.functions.sum("h")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def microOnce(): Double = SparkEntry.sentinel(spark, 50000000L)
     microOnce(); microOnce() // its range length differs → own codegen warmup
     val sentinelPre = sentinel()
     // Two temporally-separated full passes instead of back-to-back

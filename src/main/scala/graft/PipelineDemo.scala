@@ -52,7 +52,6 @@ object PipelineDemo {
       semanticCells: Int = 16,
       sourceQuota: Option[(String, Int)] = None): DataFrame = {
     import docs.sparkSession.implicits._
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
 
     // 1. quality gates (all narrow; docs too short to have bigrams have
     // no repetition signal and pass that gate)

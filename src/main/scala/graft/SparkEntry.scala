@@ -13,10 +13,12 @@ import graft.operators._
   */
 object SparkEntry {
 
-  /** Session settings every entry point needs: UTC, nanos-as-long for the
-    * events table (parquet TIMESTAMP(NANOS)), AQE on.
+  /** Session settings every entry point needs: graft's functions
+    * ([[graft.plans.GraftExtensions]]), UTC, nanos-as-long for the events
+    * table (parquet TIMESTAMP(NANOS)), AQE on.
     */
   def configure(builder: SparkSession.Builder): SparkSession.Builder = builder
+    .withExtensions(new graft.plans.GraftExtensions)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
@@ -33,6 +35,18 @@ object SparkEntry {
 
   /** Cores of a main's `local[n]` session: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** Seconds of the host-health sentinel of Bench and Verify: a fixed
+    * pure-compute job, `rows` xxhash64 + sum over [[cpus]] slices, no IO
+    * and no data dependence.
+    */
+  def sentinel(spark: SparkSession, rows: Long): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, rows, 1L, cpus.toInt)
+      .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h") // long sum overflows under ANSI
+      .agg(org.apache.spark.sql.functions.sum("h")).collect()
+    (System.nanoTime() - t0) / 1e9
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

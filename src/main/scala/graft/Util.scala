@@ -21,6 +21,11 @@ import org.apache.spark.sql.types._
   * Tables are read through [[readParquet]], which memoizes each file
   * version's inferred schema (never a relation), so a warm table read
   * starts no Spark job.
+  *
+  * Batch-tagged streaming state is written through [[appendOnce]]: each
+  * micro-batch overwrites its own `batch_id=<b>` directory, so a replay
+  * replaces exactly its batch's rows and no write reads the table's
+  * history. [[readBatched]] reads such a table back.
   */
 object Util {
   /** A named query over one scale-factor directory — the SparkEntry shape. */
@@ -142,18 +147,18 @@ object Util {
   /** Exact sum of a derived value on a 1e-6 grid (e.g. price*(1-disc)). */
   def dsum6(c: Column): Column = sum(c.cast(DecimalType(24, 6))).cast("double")
 
-  /** Replay guard for batch_id-tagged append state: true iff `path`
-    * already holds a COMMITTED row for `batchId`. Only `batch_id` is
-    * read, under a declared schema, so the probe runs no schema-inference
-    * job. A missing path reads as "not applied", and so does the debris
-    * of a write that died before its first commit (an empty directory,
-    * or one holding only `_temporary`): it lists no data file, so the
-    * read is empty. Any
-    * read failure (transient IO, a corrupt file alongside committed
-    * data) throws and fails the batch, because answering "not applied"
-    * there would re-append rows that may already be committed and
-    * double-count every sum-merged table downstream. Every writer of a
-    * probed path tags `batch_id` as a long.
+  /** Replay guard of the writers whose state has no `batch_id`
+    * partition of its own (`DupGraph.ingestBatch`, the IVF ingest log):
+    * true iff `path` already holds a COMMITTED row for `batchId`. Only
+    * `batch_id` is read, under a declared schema, so the probe runs no
+    * schema-inference job. A missing path reads as "not applied", and so
+    * does the debris of a write that died before its first commit (an
+    * empty directory, or one holding only `_temporary`): it lists no
+    * data file, so the read is empty. Any read failure (transient IO, a
+    * corrupt file alongside committed data) throws and fails the batch,
+    * because answering "not applied" there would re-append rows that may
+    * already be committed. Every writer of a probed path tags `batch_id`
+    * as a long.
     */
   private[graft] def batchAlreadyApplied(spark: SparkSession, path: String,
       batchId: Long): Boolean = {
@@ -163,27 +168,34 @@ object Util {
         .filter(col("batch_id") === batchId).isEmpty
   }
 
-  /** The replay protocol of every batch_id-tagged streaming state table:
-    * append `rows`, tagged `batch_id = batchId`, to the parquet table at
-    * `path` unless [[batchAlreadyApplied]] finds the batch committed
-    * there. An at-least-once source re-delivers a failed batch under the
-    * same id, and the replay appends nothing. `rows` is by-name, so a
-    * replay never builds it; a `batch_id` column it already has is
-    * replaced. Correct under Structured Streaming's serialized
-    * micro-batch execution.
+  /** The write of the batch_id-tagged streaming state tables: `rows`
+    * replace batch `batchId`'s partition `<path>/batch_id=<batchId>`,
+    * through a plain overwrite of that one directory. Structured
+    * Streaming re-delivers only its last uncommitted batch, under the
+    * same id and offsets, so a replay rewrites exactly the rows the
+    * first attempt wrote, and no other batch, without reading anything.
+    * A write that died leaves at most `batch_id=<batchId>/_temporary`,
+    * which readers never list and the replay's overwrite deletes. An
+    * empty batch still writes one schema-only file, so a table whose
+    * batches were all empty reads as zero rows. Read the table back
+    * with [[readBatched]].
     */
   def appendOnce(spark: SparkSession, path: String, batchId: Long)(
-      rows: => DataFrame): Unit =
-    if (!batchAlreadyApplied(spark, path, batchId)) {
-      clearUncommitted(spark, path)
-      rows.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(path)
-    }
+      rows: DataFrame): Unit =
+    rows.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+
+  /** An [[appendOnce]] table with its `batch_id` as BIGINT: partition
+    * discovery infers INT while every id fits one.
+    */
+  def readBatched(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).withColumn("batch_id", col("batch_id").cast("long"))
 
   /** Deletes `path`/_temporary. A driver that dies after some of a
     * write's tasks committed, but before the job committed, leaves their
     * files there, and the next append's job commit would promote them
-    * beside its own rows. Call between a "not applied" probe and the
-    * append: micro-batches are serialized, so no live write owns it.
+    * beside its own rows. `DupGraph.ingestBatch` calls it between a "not
+    * applied" probe and its appends: micro-batches are serialized, so no
+    * live write owns it.
     */
   private[graft] def clearUncommitted(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, "_temporary")
@@ -217,9 +229,7 @@ object Util {
     */
   def bloomBytes(df: DataFrame, hashExpr: String, items: Long,
       bits: Long): Array[Byte] = {
-    val sess = df.sparkSession
-    graft.functions.BloomFunctions.register(sess)
-    withBloomClamps(sess, items, bits) {
+    withBloomClamps(df.sparkSession, items, bits) {
       df.select(expr(s"bloom_filter_agg($hashExpr, ${items}L, ${bits}L)"))
         .head().getAs[Array[Byte]](0)
     }

@@ -46,13 +46,7 @@ object Verify {
     // Host-health stamps around the dump (the Bench sentinel discipline,
     // VERDICT r9 #8): a busy-phase dump can silently eat the driver's
     // window; the pre/post seconds in the log are the quiet/busy evidence.
-    def sentinelOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
-        .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h")
-        .agg(org.apache.spark.sql.functions.sum("h")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def sentinelOnce(): Double = SparkEntry.sentinel(spark, 200000000L)
     // Host-health evidence matters on the driver's full run, not on a
     // single-query local iteration — skip the ~5 s of fixed sentinel
     // cost when a query subset was requested.

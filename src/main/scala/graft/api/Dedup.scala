@@ -134,7 +134,6 @@ object Dedup {
     * with fewer than n tokens (no shingles) are dropped.
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int = 4): DataFrame = {
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol),
         graft.functions.ShingleFunctions.textShingles(col(textCol), n).as("sh_arr"))
@@ -729,7 +728,6 @@ object Dedup {
     * [[simhash64Relational]]).
     */
   def simhash64(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     docs.select(col(idCol),
         graft.functions.ShingleFunctions.simhash64(col(textCol)).as("simhash64"))
       .filter(col("simhash64").isNotNull)

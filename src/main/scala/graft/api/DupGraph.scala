@@ -123,7 +123,6 @@ object DupGraph {
     * the frame is empty.
     */
   private def bloomRowOf(df: DataFrame, idCol: String): (Array[Byte], Long) = {
-    graft.functions.BloomFunctions.register(df.sparkSession)
     val r = df.agg(
       expr(s"bloom_filter_agg(xxhash64(`$idCol`), ${BloomItems}L, ${BloomBits}L)").as("bf"),
       count(lit(1)).as("n")).head()

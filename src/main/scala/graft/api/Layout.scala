@@ -103,7 +103,6 @@ object Layout {
       numFiles: Int, items: Long = 1000000L, numBits: Long = 8000000L): Unit = {
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
-    graft.functions.BloomFunctions.register(spark)
     df.repartition(numFiles)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/data")
     graft.Util.withBloomClamps(spark, items, numBits) {

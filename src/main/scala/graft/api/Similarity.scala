@@ -28,7 +28,6 @@ object Similarity {
     * top-k windows (Spark orders NaN greater than any double).
     */
   def withNorm(corpus: DataFrame, embCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     corpus.withColumn("norm", expr(s"sqrt(${dot(embCol, embCol)})"))
       // `norm > 0` alone would PASS NaN norms — Spark comparisons order
       // NaN above every double — so the NaN guard must be explicit; Inf
@@ -203,7 +202,6 @@ object Similarity {
     */
   def embeddingDecontaminate(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, embCol: String, threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val emb = withNorm(corpus, embCol)
     emb.crossJoin(broadcast(centArray(benchmark, idCol, embCol)))
       .withColumn("best", expr(
@@ -441,7 +439,6 @@ object Similarity {
   def srpBandSignatures(corpus: DataFrame, idCol: String, embCol: String,
       dim: Int, bits: Int, bands: Int): DataFrame = {
     require(bits % bands == 0, "bits must split evenly into bands")
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val rpb = bits / bands
     val signs = srpSigns(bits, dim)
     def bitSql(b: Int): String = {
@@ -583,7 +580,6 @@ object Similarity {
     */
   def pqEncodeDetailed(corpus: DataFrame, codebooks: DataFrame,
       idCol: String, embCol: String, m: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val sv = subVectors(corpus, idCol, embCol, m)
     val w = Window.partitionBy(col(idCol), col("sub"))
       .orderBy(col("__ord"), col("code"))
@@ -622,7 +618,6 @@ object Similarity {
   def pqSearchAdc(detailed: DataFrame, codebooks: DataFrame,
       probes: DataFrame, idCol: String, embCol: String, m: Int,
       kNbrs: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(probes.sparkSession)
     val lut = subVectors(probes, idCol, embCol, m)
       .select(col(idCol).as("probe_id"), col("sub"), col("subv"))
       .join(codebooks, "sub")
@@ -657,7 +652,6 @@ object Similarity {
       trainSampleFraction: Double = 1.0): Unit = {
     require(trainSampleFraction > 0.0 && trainSampleFraction <= 1.0,
       "trainSampleFraction must be in (0, 1]")
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val assigned = ivfAssignSim(corpus, centroids, idCol, embCol).localCheckpoint()
     val cents = centroids.select(col(idCol).cast("long").as("cluster"),
       expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("cent_emb"))
@@ -702,7 +696,6 @@ object Similarity {
   def appendToPqIvfIndex(batch: DataFrame, idCol: String, embCol: String,
       path: String): Unit = {
     val spark = batch.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     val g = indexGen(spark, path)
     val centsRaw = spark.read.parquet(s"$g/centroids")
     val cb = spark.read.parquet(s"$g/codebooks")
@@ -736,7 +729,6 @@ object Similarity {
     */
   def searchPqIvfIndex(spark: SparkSession, path: String, probes: DataFrame,
       idCol: String, embCol: String, kNbrs: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val g = indexGen(spark, path)
     val centsRaw = spark.read.parquet(s"$g/centroids")
     val cb = spark.read.parquet(s"$g/codebooks")
@@ -788,7 +780,6 @@ object Similarity {
     * per-component error is scale/2, i.e. max|x|/254.
     */
   def quantizeInt8(corpus: DataFrame, idCol: String, embCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     // one fused codegen pass per vector (the interpreted
     // transform/array_max/filter HOF chain it replaces measured ~3.5x
     // slower); null = no finite nonzero scale (zero/NaN/Inf) OR a null
@@ -825,7 +816,6 @@ object Similarity {
     * depend on. Keeps every input column.
     */
   private def withQuant(df: DataFrame, embCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.withColumn("__q", expr(s"quantize_int8($embCol)"))
       .filter(col("__q").isNotNull)
       .withColumn("q_emb", col("__q.q_emb"))
@@ -880,7 +870,6 @@ object Similarity {
     */
   def kmeansStep(corpus: DataFrame, cents: DataFrame, idCol: String,
       embCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val emb = withNorm(corpus, embCol)
       .select(col(idCol).as("vid"),
         expr(s"transform($embCol, x -> CAST(x AS DOUBLE))").as("v"))

@@ -28,7 +28,7 @@ object Stats {
     * `lgK`: HLL precision (2^lgK registers; 12 → ~1.6% rel. std. error).
     */
   def batchStats(batch: DataFrame, keyCols: Seq[String], valueCol: String,
-      distinctCol: String, batchId: Long, lgK: Int = 12): DataFrame =
+      distinctCol: String, lgK: Int = 12): DataFrame =
     batch.groupBy(keyCols.map(col): _*).agg(
       count(lit(1)).as("n_rows"),
       sum(col(valueCol)).as("v_sum"),
@@ -39,30 +39,18 @@ object Stats {
       // mean/std derivation
       sum(col(valueCol).cast("double") * col(valueCol).cast("double")).as("v_sum_sq"),
       expr(s"hll_sketch_agg($distinctCol, $lgK)").as("distinct_hll"))
-      .withColumn("batch_id", lit(batchId))
 
-  /** Append one batch's stats rows to the persisted table. The batch scan
-    * is the ONLY pass over the batch's data; everything downstream reads
-    * the stats table.
+  /** Writes one batch's stats rows as that batch's partition of the
+    * persisted table ([[graft.Util.appendOnce]]). The batch scan is the
+    * ONLY pass over the batch's data; everything downstream reads the
+    * stats table. A streaming re-delivery of the batch (a crash between
+    * this write and the stream-checkpoint commit) rewrites the same
+    * partition, so no merge ever counts a batch twice.
     */
   def appendBatchStats(batch: DataFrame, path: String, keyCols: Seq[String],
       valueCol: String, distinctCol: String, batchId: Long, lgK: Int = 12): Unit =
-    batchStats(batch, keyCols, valueCol, distinctCol, batchId, lgK)
-      .write.mode("append").parquet(path)
-
-  /** [[appendBatchStats]] with at-least-once replay protection for
-    * streaming ingest: a stats table is append-only, so re-delivering a
-    * micro-batch (crash between the append and the stream-checkpoint
-    * commit) would DUPLICATE its rows and double-count every merge.
-    * Skips the append when rows for `batchId` already exist — correct
-    * under Structured Streaming's serialized micro-batch execution.
-    */
-  def appendBatchStatsIdempotent(batch: DataFrame, path: String,
-      keyCols: Seq[String], valueCol: String, distinctCol: String,
-      batchId: Long, lgK: Int = 12): Unit = {
     appendOnce(batch.sparkSession, path, batchId)(
-      batchStats(batch, keyCols, valueCol, distinctCol, batchId, lgK))
-  }
+      batchStats(batch, keyCols, valueCol, distinctCol, lgK))
 
   /** Corpus-wide summary from the stats table alone: exact merged
     * count/sum/min/max/mean, plus the sketch-union distinct estimate.
@@ -71,7 +59,7 @@ object Stats {
     */
   def mergedSummary(spark: SparkSession, path: String,
       keyCols: Seq[String]): DataFrame =
-    spark.read.parquet(path).groupBy(keyCols.map(col): _*).agg(
+    readBatched(spark, path).groupBy(keyCols.map(col): _*).agg(
       sum(col("n_rows")).as("n_rows"),
       sum(col("v_sum")).as("v_sum"),
       min(col("v_min")).as("v_min"),
@@ -133,9 +121,10 @@ object Stats {
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))
   }
 
-  /** Append one ingest batch's CMS rows (tagged `batch_id`) to a
-    * persisted sketch table, skipping re-delivered batches — the
-    * [[appendBatchStatsIdempotent]] contract for the frequency sketch.
+  /** Writes one ingest batch's CMS rows as its `batch_id` partition of
+    * a persisted sketch table (a re-delivered batch rewrites its own
+    * partition) — the [[appendBatchStats]] contract for the frequency
+    * sketch.
     * The merged sketch ([[mergedCms]]) then answers point-frequency
     * queries over EVERYTHING ingested while reading only
     * |batches| × depth × width rows.
@@ -152,7 +141,7 @@ object Stats {
     * bit-identical to one build over the concatenated input).
     */
   def mergedCms(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    readBatched(spark, path)
       .groupBy(col("d"), col("b")).agg(sum(col("c")).as("c"))
 
   /** Drift-monitor reference: per-key fixed bin edges (from the
@@ -195,8 +184,8 @@ object Stats {
       .otherwise(lit(0L))
 
   /** One arriving batch's bin counts against the persisted reference's
-    * edges, appended to the bins table (tagged batch_id,
-    * replay-idempotent — the [[appendBatchStatsIdempotent]] contract).
+    * edges, written as its `batch_id` partition of the bins table
+    * (replay-idempotent — the [[appendBatchStats]] contract).
     * Keys absent from the reference are dropped: there is no baseline
     * to drift from (surface them via a separate unseen-key monitor).
     */
@@ -225,7 +214,7 @@ object Stats {
   def psiReport(spark: SparkSession, refPath: String, binsPath: String,
       keyCol: String): DataFrame = {
     val ref = spark.read.parquet(refPath)
-    val cur = spark.read.parquet(binsPath)
+    val cur = readBatched(spark, binsPath)
       .groupBy(col(keyCol), col("bin")).agg(sum(col("cur_n")).as("cur_n"))
     val bins = ref.groupBy(col(keyCol)).agg(count(lit(1)).as("n_bins"))
     ref.join(cur, Seq(keyCol, "bin"), "left")
@@ -263,7 +252,7 @@ object Stats {
     val ref = spark.read.parquet(refPath)
       .select(col(keyCol), col("bin"), col("lo"), col("hi"))
     val nBins = org.apache.spark.sql.expressions.Window.partitionBy(col(keyCol))
-    val cur = spark.read.parquet(binsPath)
+    val cur = readBatched(spark, binsPath)
       .groupBy(col(keyCol), col("bin")).agg(sum(col("cur_n")).as("n"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(keyCol))
       .orderBy(col("bin"))
@@ -295,9 +284,10 @@ object Stats {
     ref.groupBy(col(keyCol), col(catCol).as("cat"))
       .agg(count(lit(1)).as("ref_n"))
 
-  /** One arriving batch's per-category counts appended to the counts
-    * table (batch_id-tagged, replay-idempotent). Categories NOT in the
-    * reference are still counted — unseen categories are precisely what
+  /** One arriving batch's per-category counts, written as its
+    * `batch_id` partition of the counts table (replay-idempotent).
+    * Categories NOT in the reference are still counted — unseen
+    * categories are precisely what
     * a categorical monitor must surface (they enter the report with a
     * smoothed-zero reference mass).
     */
@@ -320,7 +310,7 @@ object Stats {
   def jsdReport(spark: SparkSession, refPath: String, countsPath: String,
       keyCol: String): DataFrame = {
     val ref = spark.read.parquet(refPath)
-    val cur = spark.read.parquet(countsPath)
+    val cur = readBatched(spark, countsPath)
       .groupBy(col(keyCol), col("cat")).agg(sum(col("cur_n")).as("cur_n"))
     val joined = ref.join(cur, Seq(keyCol, "cat"), "full_outer")
       .na.fill(0L, Seq("ref_n", "cur_n"))
@@ -344,13 +334,14 @@ object Stats {
           + col("p_ref") * log(col("p_ref") / col("m")) / 2).as("jsd"))
   }
 
-  /** Replay-idempotent per-(key, day) count append — the mergeable state
+  /** Replay-idempotent per-(key, day) counts — the mergeable state
     * behind [[ewmaReport]] and the streaming twin of
     * [[graft.operators.EventOps.q183EwmaDaily]]
     * ([[graft.streaming.StreamOps.ewmaIngestStream]]). Counts sum
     * associatively, so micro-batches may split days arbitrarily; the
     * table stays |keys| × |days| × |batches| rows regardless of stream
-    * volume. At-least-once re-delivery of a batchId appends nothing.
+    * volume. At-least-once re-delivery of a batchId rewrites its own
+    * `batch_id` partition.
     */
   def appendDailyCountsIdempotent(batch: DataFrame, countsPath: String,
       keyCol: String, dayCol: String, batchId: Long): Unit = {
@@ -367,7 +358,7 @@ object Stats {
     */
   def ewmaReport(spark: SparkSession, countsPath: String,
       alpha: Double = 0.3): DataFrame = {
-    val daily = spark.read.parquet(countsPath)
+    val daily = readBatched(spark, countsPath)
       .groupBy(col("k"), col("day")).agg(sum(col("c")).as("c"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("day"))
@@ -379,13 +370,14 @@ object Stats {
           .as("ewma"))
   }
 
-  /** Replay-idempotent per-batch (key, min-day) append — the mergeable
+  /** Replay-idempotent per-batch (key, min-day) candidates — the mergeable
     * state behind [[growthReport]] and
     * [[graft.streaming.StreamOps.growthIngestStream]]. MIN is
     * associative, so each batch contributes one candidate first-day per
     * key it saw and the report folds candidates across batches — the
     * table stays |keys seen| × |batches| rows regardless of stream
-    * volume, and re-delivered batchIds append nothing.
+    * volume, and a re-delivered batchId rewrites its own `batch_id`
+    * partition.
     */
   def appendFirstSeenIdempotent(batch: DataFrame, path: String,
       keyCol: String, dayCol: String, batchId: Long): Unit = {
@@ -402,7 +394,7 @@ object Stats {
     * the first-seen table.
     */
   def growthReport(spark: SparkSession, path: String): DataFrame = {
-    val firstSeen = spark.read.parquet(path)
+    val firstSeen = readBatched(spark, path)
       .groupBy(col("k")).agg(min(col("first_day")).as("first_day"))
     firstSeen.groupBy(col("first_day").as("day"))
       .agg(count(lit(1)).as("n_new"))

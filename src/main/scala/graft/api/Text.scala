@@ -77,8 +77,8 @@ object Text {
     * chain it replaces measured ~20× slower over the corpus) and the
     * total is plain token-count arithmetic (`n_tokens − n + 1`);
     * integer-ratio doubles, so engine-exact. Requires the graft function
-    * surface in the session ([[graft.functions.ShingleFunctions.register]]
-    * or the `GraftExtensions` conf) — query bindings register it.
+    * surface in the session ([[graft.plans.GraftExtensions]], which
+    * [[graft.SparkEntry.configure]] installs).
     */
   def dupNgramFrac(text: Column, n: Int): Column = {
     val total = size(split(text, " ")) - (n - 1)
@@ -207,7 +207,6 @@ object Text {
     */
   def tfidf(docs: DataFrame, idCol: String, textCol: String,
       probeFilter: Column, minTokenLen: Int = 4): DataFrame = {
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val tf = docs.filter(probeFilter)
       .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{call_function, xxhash64}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Registration for Spark's OWN Bloom-filter expressions.
+/** SQL builders for Spark's OWN Bloom-filter expressions.
   *
   * `BloomFilterAggregate` / `BloomFilterMightContain` are the engine's
   * internal pair behind the runtime bloom-filter join optimization —
@@ -13,12 +13,11 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * `org.apache.spark.util.sketch.BloomFilter` — but Spark does not list
   * them in the public function registry. The decontamination gate wants
   * exactly these semantics (probe a broadcast bitset before an exact
-  * join), so registering the existing expressions beats reimplementing
+  * join), so exposing the existing expressions beats reimplementing
   * the sketch: same code path the optimizer itself trusts.
   *
-  * SQL shapes registered (one shared builder each — the
-  * [[graft.plans.GraftExtensions]] injection delegates here, so the
-  * arity rules cannot drift between the two registration paths):
+  * SQL shapes, injected into every session by
+  * [[graft.plans.GraftExtensions]] through these arity-checked builders:
   *   - `bloom_filter_agg(xxhash64(x)[, estimatedItems[, numBits]])` —
   *     aggregates LONG hashes into a binary Bloom filter column
   *   - `might_contain(bloom, xxhash64(x))` — membership probe; false
@@ -45,19 +44,11 @@ object BloomFunctions {
     BloomFilterMightContain(exprs.head, exprs(1))
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", buildBloomFilterAgg, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", buildMightContain, "scala_udf")
-  }
-
   /** `might_contain(bytes, xxhash64(cols))`: the serialized filter rides
     * the plan as a one-row `Dataset.scalar()` subquery, so a probe needs
     * no catalog entry and no SQL string.
     */
   def mightContain(spark: SparkSession, bytes: Array[Byte], cols: Column*): Column = {
-    register(spark)
     import spark.implicits._
     call_function("might_contain", Seq(bytes).toDF("bf").scalar(), xxhash64(cols: _*))
   }

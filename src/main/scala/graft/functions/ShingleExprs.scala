@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -243,20 +243,6 @@ object ShingleFunctions {
     if (n < 1) throw new IllegalArgumentException(
       s"text_shingles: n must be >= 1, got $n")
     n
-  }
-
-  /** Idempotent per-session registration (SQL names `text_shingles`,
-    * `minhash_sigs`).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_shingles",
-      exprs => TextShingles(exprs.head, extractN(exprs)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinHashSigs(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => Simhash64Expr(exprs.head), "scala_udf")
   }
 
   def textShingles(text: Column, n: Int): Column =

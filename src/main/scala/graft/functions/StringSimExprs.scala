@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -97,11 +97,6 @@ object StringSimFunctions {
         s"jaro_winkler expects 2 arguments, got ${exprs.size}")
     JaroWinklerExpr(exprs.head, exprs(1))
   }
-
-  /** Idempotent per-session registration (SQL name `jaro_winkler`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", buildJaroWinkler, "scala_udf")
 
   def jaroWinkler(a: Column, b: Column): Column =
     call_function("jaro_winkler", a, b)

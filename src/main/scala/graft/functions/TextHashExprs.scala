@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -118,9 +118,9 @@ object TextHashFunctions {
       throw new IllegalArgumentException(
         s"$name expects $min to $max arguments, got ${exprs.size}")
 
-  /** Arity-checked builders shared by [[register]] and the session
-    * extension ([[graft.plans.GraftExtensions]]) — extra arguments fail
-    * loudly instead of being silently ignored.
+  /** Arity-checked builders of the session extension
+    * ([[graft.plans.GraftExtensions]]) — extra arguments fail loudly
+    * instead of being silently ignored.
     */
   private[graft] def buildPolyHash(exprs: Seq[Expression]): Expression = {
     arity("poly_hash", exprs, 1, 1)
@@ -135,18 +135,6 @@ object TextHashFunctions {
   private[graft] def buildCharEntropy(exprs: Seq[Expression]): Expression = {
     arity("char_entropy", exprs, 1, 1)
     CharEntropyExpr(exprs.head)
-  }
-
-  /** Idempotent per-session registration (SQL names `poly_hash`,
-    * `min_rolling_hash`).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", buildPolyHash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_rolling_hash", buildMinRollingHash, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", buildCharEntropy, "scala_udf")
   }
 
   def polyHash(text: Column): Column = call_function("poly_hash", text)

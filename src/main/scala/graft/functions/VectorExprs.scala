@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -247,18 +247,8 @@ case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
 }
 
 object VectorFunctions {
-  /** Idempotent per-session registration (also exposes `vector_dot` /
-    * `vector_dot_int` to SQL text via the function registry).
+  /** Column-level dot product (`vector_dot`, injected by
+    * [[graft.plans.GraftExtensions]]).
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot_int", exprs => VectorDotInt(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantize_int8", exprs => QuantizeInt8Expr(exprs.head), "scala_udf")
-  }
-
-  /** Column-level dot product; requires [[register]] on the session. */
   def vectorDot(a: Column, b: Column): Column = call_function("vector_dot", a, b)
 }

@@ -227,7 +227,6 @@ object DedupOps {
     */
   def q127HybridNearDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val pairs = lshGraphEdges(spark, dir, 0.25)
       .select($"id_a", $"id_b", $"jaccard")
     val e = table(spark, dir, "embeddings")
@@ -1612,7 +1611,6 @@ object DedupOps {
     */
   def q239JwLinkage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.StringSimFunctions.register(spark)
     val heads = docs(spark, dir)
       .select($"doc_id", lower(substring($"text", 1, 40)).as("head"))
     // one scan: the two blocking keys explode out of a single pass over

@@ -5579,11 +5579,12 @@ object EventOps {
       .groupBy($"event_type", $"day").agg(max($"v_e2").as("mx")))
   }
 
-  /** One live-extremes micro-batch append (replay-idempotent via the
-    * batch_id tag): reduces the batch to per-(type, day) MAX candidates
-    * — max is the mergeable statistic, so out-of-order and cross-batch
-    * re-deliveries of a day just merge. Rows need event_type, day,
-    * v_e2. Public so the replay spec can drive it directly.
+  /** One live-extremes micro-batch: reduces the batch to per-(type,
+    * day) MAX candidates — max is the mergeable statistic, so a day
+    * split across batches just merges — and writes them as the batch's
+    * `batch_id` partition, which a re-delivery rewrites
+    * ([[graft.Util.appendOnce]]). Rows need event_type, day, v_e2.
+    * Public so the replay spec can drive it directly.
     */
   def appendDailyMaxIdempotent(batch: DataFrame, path: String,
       batchId: Long): Unit = {
@@ -5597,7 +5598,7 @@ object EventOps {
     * candidates table.
     */
   def gumbelReport(spark: SparkSession, path: String): DataFrame =
-    gumbelFit(spark.read.parquet(path)
+    gumbelFit(readBatched(spark, path)
       .groupBy(col("event_type"), col("day"))
       .agg(max(col("mx")).as("mx")))
 

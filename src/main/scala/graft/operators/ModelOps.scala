@@ -295,9 +295,10 @@ object ModelOps {
         sum(((col("p") - col("y")) * (col("p") - col("y")))
           .cast(DecimalType(32, 12))).as("sq"))
 
-  /** One live-calibration micro-batch append (replay-idempotent via the
-    * batch_id tag): reduces the batch to its decile-bin sufficient
-    * statistics and appends them — state grows with bins × batches,
+  /** One live-calibration micro-batch: reduces the batch to its
+    * decile-bin sufficient statistics and writes them as the batch's
+    * `batch_id` partition, which a re-delivery rewrites
+    * ([[graft.Util.appendOnce]]) — state grows with bins × batches,
     * never rows. Public so the replay spec can drive it directly.
     */
   def appendCalibrationBatchIdempotent(batch: DataFrame, path: String,
@@ -311,7 +312,7 @@ object ModelOps {
     * statistics. Reads only the bins table.
     */
   def brierReport(spark: SparkSession, path: String): DataFrame =
-    brierFromBins(spark.read.parquet(path)
+    brierFromBins(readBatched(spark, path)
       .groupBy(col("bin"))
       .agg(sum(col("n")).as("n"), sum(col("sp")).as("sp"),
         sum(col("sy")).as("sy"), sum(col("sq")).as("sq"))

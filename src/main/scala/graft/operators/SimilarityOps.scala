@@ -133,7 +133,6 @@ object SimilarityOps {
     */
   def q45TopkUdaf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val topk = udaf(new graft.functions.TopKAggregator(3))
     val emb = table(spark, dir, "embeddings")
       .withColumn("norm", expr(s"sqrt(${dot("embedding", "embedding")})"))
@@ -1000,7 +999,6 @@ object SimilarityOps {
     */
   def q165LabelCosineGap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val e = emb(spark, dir)
     val a = e.select($"vec_id", $"embedding".as("a_emb"), $"label".as("a_label"))
     val b = e.select(($"vec_id" - 1).as("vec_id"), $"embedding".as("b_emb"),
@@ -1232,7 +1230,6 @@ object SimilarityOps {
     */
   def q246SilhouetteCard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val e = emb(spark, dir)
     val w = Window.partitionBy($"label")
       .orderBy(md5($"vec_id".cast("string")), $"vec_id")
@@ -1713,7 +1710,6 @@ object SimilarityOps {
     */
   def q299LabelMargin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val e = emb(spark, dir)
     val cent = e
       .select($"label", posexplode($"embedding").as(Seq("dim", "v")))

@@ -147,7 +147,6 @@ object TextOps {
     */
   def q47RollingFingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TextHashFunctions.register(spark)
     table(spark, dir, "documents")
       .select($"doc_id",
         graft.functions.TextHashFunctions.polyHash($"text").as("doc_hash"),
@@ -189,7 +188,6 @@ object TextOps {
     */
   def q86Repetition(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     table(spark, dir, "documents")
       .select($"doc_id",
         graft.api.Text.tokenCount($"text").as("n_tokens"),
@@ -304,7 +302,6 @@ object TextOps {
     */
   def q89FilterFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val sig = table(spark, dir, "documents").select($"source",
       graft.api.Text.tokenCount($"text").as("nt"),
       graft.api.Text.langIdPredict($"text").as("plang"),
@@ -349,7 +346,6 @@ object TextOps {
     */
   def q90CharEntropy(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TextHashFunctions.register(spark)
     table(spark, dir, "documents")
       .filter(length($"text") > 0)
       .select($"doc_id",
@@ -587,7 +583,6 @@ object TextOps {
     */
   def q108VocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window.orderBy($"bucket")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     table(spark, dir, "documents")
@@ -2087,7 +2082,6 @@ object TextOps {
     */
   def q288HeapsFit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val d = table(spark, dir, "documents")
     val bt = d.groupBy(expr("doc_id div 50").as("bucket"))
       .agg(sum(graft.api.Text.tokenCount($"text")).as("toks_b"))
@@ -3058,7 +3052,6 @@ object TextOps {
     */
   def q75BigramDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     table(spark, dir, "documents")
       .select(explode(graft.functions.ShingleFunctions.textShingles($"text", 2)).as("bigram"))
       .groupBy($"bigram")

@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CharEntropyExpr, MinHashSigs, MinRollingHashExpr, PolyHashExpr, QuantizeInt8Expr, ShingleFunctions, Simhash64Expr, TextHashFunctions, TextShingles, VectorDot, VectorDotInt}
 
-/** Library entry point for `spark.sql.extensions`: injects graft's
-  * function surface into every session built with
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the
-  * standard way to ship Catalyst extensions with a library), so SQL text
-  * like `SELECT vector_dot(a, b)` works without programmatic
-  * registration.
+/** The one registry of graft's function surface: injects its 12
+  * functions into every session built through
+  * [[graft.SparkEntry.configure]] (or with
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, the
+  * standard way to ship Catalyst extensions with a library), so both the
+  * Column helpers (`call_function`) and SQL text like
+  * `SELECT vector_dot(a, b)` resolve with no per-call registration.
   *
   * Deliberately minimal: per SURVEY.md §4/§7.3, every operator semantics
   * in this engine is expressible with Catalyst's existing optimizer —

@@ -113,13 +113,13 @@ object Replicator {
         currentRegion.equalsIgnoreCase(row.getString(1)) => name }
       .toSeq.sorted
 
-  /** Ops 4+5: decode payload bytes to UTF-8 and extract the CDC fields
-    * (schema-on-read, commitTimestamp kept as string — Handler.java:74,86).
+  /** Ops 4+5: decode payload bytes to UTF-8 once and extract the CDC
+    * fields (schema-on-read, commitTimestamp kept as string —
+    * Handler.java:74,86).
     */
   def parse(records: DataFrame): DataFrame = {
     val json = from_json(col("data").cast("string"), payloadSchema)
     records
-      .withColumn("payload_text", col("data").cast("string"))
       .withColumn("cdc_key", json.getField("key"))
       .withColumn("commitTimestamp", json.getField("commitTimestamp"))
   }

@@ -86,7 +86,6 @@ object StreamOps {
       lateness: String, idCol: String, textCol: String): DataFrame = {
     require(!docs.columns.contains("__sigs") && !docs.columns.contains("__band_key"),
       "nearDupFilterWithinWatermark reserves the __sigs/__band_key column names")
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     val sigs = graft.functions.ShingleFunctions.minhashSigs(
       graft.functions.ShingleFunctions.textShingles(col(textCol), 4))
     docs
@@ -122,7 +121,6 @@ object StreamOps {
       idCol: String, textCol: String, n: Int = 4): DataFrame = {
     require(!docs.columns.contains("__bench_sh"),
       "decontaminationFilter reserves the __bench_sh column name")
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     val benchArr = graft.api.Dedup
       .shingleSets(benchmark, idCol, textCol, n)
       .select(explode(col("sh_arr")).as("sh"))
@@ -186,21 +184,22 @@ object StreamOps {
       sink(graft.api.Dedup.decontaminationDrop(batch, bench, idCol, textCol, n), batchId)
     }
 
-  /** Streaming twin of [[graft.api.Stats]]: each micro-batch appends its
+  /** Streaming twin of [[graft.api.Stats]]: each micro-batch writes its
     * mergeable stats rows (count/sum/min/max/moments + HLL sketch per
-    * key) to the persisted stats table — the live ingest path of the
-    * never-rescan pattern. [[graft.api.Stats.mergedSummary]] over the
-    * same directory serves corpus-wide answers that include every batch
-    * seen so far; at-least-once re-delivery is skipped by stored
-    * batch_id ([[graft.api.Stats.appendBatchStatsIdempotent]]), so a
-    * replay never double-counts. Returns the configured writer; the
-    * caller sets checkpoint/trigger options and calls `.start()`.
+    * key) as its `batch_id` partition of the persisted stats table —
+    * the live ingest path of the never-rescan pattern.
+    * [[graft.api.Stats.mergedSummary]] over the same directory serves
+    * corpus-wide answers that include every batch seen so far; an
+    * at-least-once re-delivery rewrites its own partition
+    * ([[graft.api.Stats.appendBatchStats]]), so a replay never
+    * double-counts. Returns the configured writer; the caller sets
+    * checkpoint/trigger options and calls `.start()`.
     */
   def incrementalStats(docs: DataFrame, statsDir: String,
       keyCols: Seq[String], valueCol: String, distinctCol: String,
       lgK: Int = 12): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      graft.api.Stats.appendBatchStatsIdempotent(batch.toDF(), statsDir,
+      graft.api.Stats.appendBatchStats(batch.toDF(), statsDir,
         keyCols, valueCol, distinctCol, batchId, lgK)
     }
 
@@ -274,8 +273,8 @@ object StreamOps {
 
   /** Live extreme-value monitor — the streaming twin of the q341
     * Gumbel/return-level card: each micro-batch reduces to per-
-    * (type, day) MAX candidates (max-mergeable, so replays and
-    * out-of-order days just merge) appended replay-idempotently;
+    * (type, day) MAX candidates (max-mergeable, so out-of-order days
+    * just merge) written replay-idempotently;
     * [[graft.operators.EventOps.gumbelReport]] max-merges and runs the
     * identical fit, so stream == batch on any micro-batch cut. State:
     * |types|×|days|×|batches| rows — never the events. Rows need
@@ -333,7 +332,7 @@ object StreamOps {
     */
   def srmReport(spark: SparkSession, path: String): DataFrame =
     graft.operators.EventOps.srmFromFirstDays(
-      spark.read.parquet(path)
+      graft.Util.readBatched(spark, path)
         .groupBy(col("k").as("user_id"))
         .agg(min(col("first_day")).as("first_day")))
 
@@ -342,7 +341,8 @@ object StreamOps {
     * per-(user, event_type) CDC state CANDIDATES — last-writer cents at
     * the T1 cut and at head (each tagged with its zero-padded ordering
     * key, so candidates are argmax-mergeable) plus pre/post write
-    * counts (sum-mergeable) — replay-idempotent via the batch_id tag.
+    * counts (sum-mergeable) — replay-idempotent: a re-delivered batch
+    * rewrites its own `batch_id` partition.
     * The classification never needs the events again: state grows with
     * |keys| × |batches|. `t1Nanos` is the snapshot cut in epoch nanos;
     * rows need user_id, event_type, ts (epoch-nanos long), event_id,
@@ -385,7 +385,7 @@ object StreamOps {
     */
   def cdcDiffReport(spark: SparkSession, path: String): DataFrame =
     graft.operators.EventOps.snapshotDiffCard(
-      spark.read.parquet(path)
+      graft.Util.readBatched(spark, path)
         .groupBy(col("user_id"), col("event_type"))
         .agg(
           max_by(col("c1"), col("k1")).as("c1"),
@@ -396,9 +396,9 @@ object StreamOps {
   /** Live source↔replica reconciliation monitor, ingest side — the
     * streaming twin of the q312 ledger: each micro-batch appends its
     * per-(stream, day) [[graft.operators.EventOps.reconcilePartials]]
-    * (counts and DECIMAL content checksums — all SUM-mergeable), tagged
-    * and replay-idempotent via batch_id. The verdict never re-reads
-    * events: state grows with |streams × days| × |batches|, and the
+    * (counts and DECIMAL content checksums — all SUM-mergeable) as its
+    * `batch_id` partition, which a replay rewrites. The verdict never
+    * re-reads events: state grows with |streams × days| × |batches|, and the
     * commutative checksum means arrival ORDER cannot change the report —
     * the property a cross-region monitor needs under out-of-order
     * delivery. Rows need event_id, ts (epoch-nanos long), user_id,
@@ -427,7 +427,7 @@ object StreamOps {
     */
   def reconcileReport(spark: SparkSession, path: String): DataFrame =
     graft.operators.EventOps.reconcileVerdict(
-      spark.read.parquet(path)
+      graft.Util.readBatched(spark, path)
         .groupBy(col("event_type"), col("day"))
         .agg(sum(col("n_src")).as("n_src"), sum(col("n_dst")).as("n_dst"),
           sum(col("s_src")).as("s_src"), sum(col("s_dst")).as("s_dst"),
@@ -455,8 +455,8 @@ object StreamOps {
   /** Live k-anonymity monitor, ingest side — the streaming twin of
     * [[graft.operators.GovernanceOps.q221KAnonymity]]. Each micro-batch
     * appends ONE row per quasi-identifier combination it saw (its
-    * partial count, batch_id-tagged and replay-idempotent, the
-    * [[graft.api.Stats]] counts-table pattern), so re-identification
+    * partial count, in its own replay-idempotent `batch_id` partition,
+    * the [[graft.api.Stats]] counts-table pattern), so re-identification
     * risk is monitorable DURING ingest without rescanning the corpus:
     * the table grows with |batches| × |QI domain|, never with rows.
     */
@@ -484,7 +484,7 @@ object StreamOps {
     */
   def kAnonymityReport(spark: SparkSession, countsPath: String,
       qiCols: Seq[String]): DataFrame = {
-    val merged = spark.read.parquet(countsPath)
+    val merged = graft.Util.readBatched(spark, countsPath)
       .groupBy(qiCols.map(col): _*)
       .agg(sum(col("cur_n")).as("k"))
     graft.operators.GovernanceOps.kAnonymityBands(merged)
@@ -495,10 +495,10 @@ object StreamOps {
     * twin of [[graft.api.Sampling.stratifiedSample]]. The md5-order
     * sample is a BOTTOM-K SKETCH (k smallest hash values per stratum),
     * and bottom-k is mergeable: min-k(min-k(A) ∪ min-k(B)) =
-    * min-k(A ∪ B). So each micro-batch appends only its own per-stratum
-    * bottom-k candidates (≤ k·|strata| rows per batch, batch_id-tagged
-    * and replay-idempotent) and the maintained table stays a valid
-    * basis for the corpus-so-far sample at any moment — a uniform
+    * min-k(A ∪ B). So each micro-batch writes only its own per-stratum
+    * bottom-k candidates (≤ k·|strata| rows per batch, as its
+    * replay-idempotent `batch_id` partition) and the maintained table
+    * stays a valid basis for the corpus-so-far sample at any moment — a uniform
     * reservoir over an unbounded stream with NO RNG state to
     * checkpoint, and bit-identical to re-sampling the full corpus.
     */
@@ -529,15 +529,15 @@ object StreamOps {
   def stratifiedSampleReport(spark: SparkSession, path: String,
       strataCol: String, idCol: String, k: Int): DataFrame =
     graft.api.Sampling.stratifiedSample(
-      spark.read.parquet(path).drop("batch_id"), strataCol, idCol, k)
+      graft.Util.readBatched(spark, path).drop("batch_id"), strataCol, idCol, k)
 
   /** Live conformal-calibration maintenance, ingest side — the
     * streaming twin of the batch split-conformal card
     * ([[graft.operators.ModelOps.q265ConformalInterval]]'s calibration
     * stage): each micro-batch's scored rows (group, id, residual)
     * contribute their k smallest Knuth-hash priorities per group
-    * (replay-idempotent, batch_id-tagged) to a persisted candidate
-    * table. Because the deterministic bottom-k is a mergeable uniform
+    * (as its replay-idempotent `batch_id` partition) to a persisted
+    * candidate table. Because the deterministic bottom-k is a mergeable uniform
     * sample ([[graft.api.Sampling.stratifiedSample]]'s merge identity),
     * the union of per-batch candidates re-ranked once IS the bottom-k
     * of everything ever scored — a true streaming calibration
@@ -578,7 +578,7 @@ object StreamOps {
       alpha: Double = 0.1): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha in (0,1): $alpha")
     val merged = graft.api.Sampling.stratifiedSample(
-        spark.read.parquet(path).drop("batch_id"), groupCol, idCol, k)
+        graft.Util.readBatched(spark, path).drop("batch_id"), groupCol, idCol, k)
       .drop("sample_rank", "u", "priority")
     val q = lit(1.0 - alpha)
     merged.groupBy(col(groupCol))
@@ -602,13 +602,15 @@ object StreamOps {
     * [[graft.operators.EventOps.q243LateDataAudit]]. Lateness composes
     * across ordered micro-batches because the running max does: each
     * batch computes per-stream lateness against max(within-batch
-    * running max, carried high-water mark), folds its bucket counts
-    * into the persisted audit table, and advances the per-stream mark.
-    * State is |streams|×5 audit rows + |streams| marks — broadcast
-    * scale by construction (the streamingKmeans state-table contract) —
-    * and the batch_id in the marks table makes at-least-once replay a
-    * no-op. Feed batches in commit (event_id) order, which is exactly
-    * the order the replicator checkpoints by.
+    * running max, carried high-water mark) and writes two
+    * [[graft.Util.appendOnce]] partitions of per-batch partials: its
+    * bucket counts with their max lateness under `agg/`, and its
+    * per-stream max ts under `marks/`. Batch b's carried mark folds only
+    * the marks of batches before b, so a replay of b, whether its first
+    * attempt died before, between or after the two writes, recomputes
+    * and rewrites the same two partitions. State is |streams|×5 +
+    * |streams| rows per batch. Feed batches in commit (event_id) order,
+    * which is exactly the order the replicator checkpoints by.
     */
   def lateDataIngestStream(events: DataFrame,
       path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -616,28 +618,24 @@ object StreamOps {
       lateDataIngestBatch(batch.toDF(), batchId, path)
     }
 
-  /** One [[lateDataIngestStream]] micro-batch fold — public so the
+  /** One [[lateDataIngestStream]] micro-batch — public so the
     * parity/replay spec can drive it directly. Expects columns
     * (event_type, event_id, ts_ms).
     */
   def lateDataIngestBatch(batch: DataFrame, batchId: Long, path: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marksPath = s"$path/marks"
-    val aggPath = s"$path/agg"
-    if (graft.Util.batchAlreadyApplied(spark, marksPath, batchId)) return
-    val hasState = fs.exists(new org.apache.hadoop.fs.Path(marksPath))
-    val marks =
-      if (hasState) spark.read.parquet(marksPath)
-        .select($"event_type", $"max_ts")
-      else spark.emptyDataset[(String, Long)].toDF("event_type", "max_ts")
+    val marksPath = new org.apache.hadoop.fs.Path(path, "marks")
+    val carried =
+      if (marksPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marksPath))
+        graft.Util.readBatched(spark, marksPath.toString).filter($"batch_id" < batchId)
+          .groupBy($"event_type").agg(max($"max_ts").as("carried"))
+      else spark.emptyDataset[(String, Long)].toDF("event_type", "carried")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type").orderBy($"event_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val late = batch.select($"event_type", $"event_id", $"ts_ms")
-      .join(marks.withColumnRenamed("max_ts", "carried"), Seq("event_type"), "left")
+      .join(carried, Seq("event_type"), "left")
       .withColumn("late_ms",
         greatest(max($"ts_ms").over(w), coalesce($"carried", lit(Long.MinValue)))
           - $"ts_ms")
@@ -646,39 +644,24 @@ object StreamOps {
       .when($"late_ms" <= 300000L, "c_5min")
       .when($"late_ms" <= 1800000L, "d_30min")
       .otherwise("e_beyond")
-    val batchAgg = late.groupBy($"event_type", bucket.as("bucket"))
-      .agg(count(lit(1)).as("n_events"), max($"late_ms").as("max_late_ms"))
-    val prevAgg =
-      if (hasState && fs.exists(new org.apache.hadoop.fs.Path(aggPath)))
-        spark.read.parquet(aggPath)
-      else spark.emptyDataset[(String, String, Long, Long)]
-        .toDF("event_type", "bucket", "n_events", "max_late_ms")
-    // state is |streams|-bounded — materialize on the driver before the
-    // overwrite (cannot overwrite a path mid-read)
-    val mergedAgg = prevAgg.unionByName(batchAgg)
-      .groupBy($"event_type", $"bucket")
-      .agg(sum($"n_events").as("n_events"), max($"max_late_ms").as("max_late_ms"))
-      .collect().toSeq
-    val newMarks = marks
-      .unionByName(batch.groupBy($"event_type").agg(max($"ts_ms").as("max_ts")))
-      .groupBy($"event_type").agg(max($"max_ts").as("max_ts"))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1)))
-    spark.createDataFrame(spark.sparkContext.parallelize(mergedAgg, 1),
-        prevAgg.schema)
-      .write.mode("overwrite").parquet(aggPath)
-    newMarks.toDF("event_type", "max_ts").withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("overwrite").parquet(marksPath)
+    graft.Util.appendOnce(spark, s"$path/agg", batchId)(
+      late.groupBy($"event_type", bucket.as("bucket"))
+        .agg(count(lit(1)).as("n_events"), max($"late_ms").as("max_late_ms")))
+    graft.Util.appendOnce(spark, marksPath.toString, batchId)(
+      batch.groupBy($"event_type").agg(max($"ts_ms").as("max_ts")))
   }
 
-  /** Read side of the live late-data audit: the persisted bucket table
-    * plus per-stream shares — the same shape (and, under ordered
-    * ingest, the same values) as the batch q243 audit. Reads only the
-    * |streams|×5-row state.
+  /** Read side of the live late-data audit: the per-batch bucket
+    * partials folded (counts add, lateness maxes) plus per-stream
+    * shares — the same shape (and, under ordered ingest, the same
+    * values) as the batch q243 audit. Reads only the |streams|×5 rows
+    * per batch of the `agg/` table.
     */
   def lateDataReport(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$path/agg")
+    graft.Util.readBatched(spark, s"$path/agg")
+      .groupBy($"event_type", $"bucket")
+      .agg(sum($"n_events").as("n_events"), max($"max_late_ms").as("max_late_ms"))
       .withColumn("share", round($"n_events".cast("double") /
         sum($"n_events").over(org.apache.spark.sql.expressions.Window
           .partitionBy($"event_type")), 6))
@@ -811,7 +794,6 @@ object StreamOps {
       jaccardThreshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val latenessMs = latenessToMs(lateness)
     val sigs = graft.functions.ShingleFunctions.minhashSigs(col("__sh"))
     val keyed = docs

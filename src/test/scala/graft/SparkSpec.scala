@@ -11,7 +11,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkEntry.configure(SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
-    .withExtensions(new graft.plans.GraftExtensions)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false"))
     .getOrCreate()

@@ -5,13 +5,15 @@ import org.apache.spark.sql.types._
 
 /** Pins the contracts of the shared helpers: the schema memo of
   * [[Util.readParquet]] (a new file version or inference setting infers
-  * again; a warm read starts no job; reads stay distinct relations), and
-  * the replay guard of [[Util.appendOnce]] and
-  * [[Util.batchAlreadyApplied]]: a missing path or empty debris reads as
-  * "not applied", and any read failure must rethrow, because answering
-  * "not applied" on a transient error would re-append a
-  * possibly-committed batch and double-count every sum-merged
-  * idempotent table downstream.
+  * again; a warm read starts no job; reads stay distinct relations); the
+  * replay-by-overwrite write of [[Util.appendOnce]] (a replay rewrites
+  * exactly its own `batch_id` partition, a failed or dead attempt's
+  * files are never read, an all-empty stream stays readable, and a new
+  * batch reads nothing); and the probe of [[Util.batchAlreadyApplied]]
+  * that the writers without a partition of their own keep: a missing
+  * path or empty debris reads as "not applied", and any read failure
+  * must rethrow, because answering "not applied" on a transient error
+  * would re-append a possibly-committed batch.
   */
 class UtilSpec extends SparkSpec {
 
@@ -66,19 +68,78 @@ class UtilSpec extends SparkSpec {
     assert(batchRows(path, 1L) === 2)
     assert(batchRows(path, 2L) === 2)
     assert(spark.read.parquet(path).count() === 4)
-    assert(spark.read.parquet(path).schema("batch_id").dataType === LongType)
+    assert(Util.readBatched(spark, path).schema("batch_id").dataType === LongType)
   }
 
-  test("appendOnce: a replay neither writes nor builds its frame") {
+  test("appendOnce: replaying an older batch leaves every batch's rows unchanged") {
     import spark.implicits._
-    val path = s"${tmpDir("append_once_replay")}/state"
-    Util.appendOnce(spark, path, 7L)(Seq(("x", 1L)).toDF("k", "n"))
-    def files = new java.io.File(path).list().toSet
-    val before = files
-    Util.appendOnce(spark, path, 7L)(
-      throw new IllegalStateException("a replay must not build its frame"))
-    assert(files === before)
-    assert(batchRows(path, 7L) === 1)
+    val path = s"${tmpDir("append_once_older")}/state"
+    def rows(b: Long) = Seq(("x", b), ("y", b * 10)).toDF("k", "n")
+    (0L to 3L).foreach(b => Util.appendOnce(spark, path, b)(rows(b)))
+    def table = Util.readBatched(spark, path).as[(String, Long, Long)].collect().sorted.toSeq
+    def files(b: Long) = new java.io.File(s"$path/batch_id=$b").list().sorted.toSeq
+    val before = table
+    val others = Seq(0L, 2L, 3L).map(files)
+    Util.appendOnce(spark, path, 1L)(rows(1))
+    assert(table === before)
+    assert(table.size === 8)
+    assert(Seq(0L, 2L, 3L).map(files) === others, "a replay touches only its own partition")
+  }
+
+  test("appendOnce: a write that fails after a task commit, then its replay, equals a clean run") {
+    import spark.implicits._
+    val dir = tmpDir("append_once_fault")
+    val (path, clean) = (s"$dir/state", s"$dir/clean")
+    def rows(b: Long) = spark.range(0, 6, 1, 2).select(($"id" + b * 10).as("v"))
+    for (p <- Seq(path, clean)) Util.appendOnce(spark, p, 0L)(rows(0))
+    Util.appendOnce(spark, clean, 1L)(rows(1))
+    // batch 1's first attempt: task 0 commits its file, then task 1 throws
+    val taskCommits = new java.io.File(s"$path/batch_id=1/_temporary/0")
+    val dieAfterCommit = udf { (part: Int, v: Long) =>
+      if (part == 1 && UtilSpec.failOnce.getAndSet(false)) {
+        val deadline = System.nanoTime() + 60000000000L
+        def committed = Option(taskCommits.list()).exists(_.exists(_.startsWith("task_")))
+        while (!committed && System.nanoTime() < deadline) Thread.sleep(10)
+        UtilSpec.sawCommit.set(committed)
+        throw new IllegalStateException("the attempt dies after task 0 committed")
+      }
+      v
+    }
+    def attempt = rows(1).withColumn("v", dieAfterCommit(spark_partition_id(), $"v"))
+    UtilSpec.failOnce.set(true)
+    intercept[Exception](Util.appendOnce(spark, path, 1L)(attempt))
+    assert(UtilSpec.sawCommit.get(), "task 1 failed before task 0 committed")
+    def table(p: String) = Util.readBatched(spark, p).as[(Long, Long)].collect().sorted.toSeq
+    assert(table(path) === table(clean).filter(_._2 == 0L), "the failed attempt exposed rows")
+    Util.appendOnce(spark, path, 1L)(attempt)
+    assert(table(path) === table(clean))
+    val read = Util.readBatched(spark, path).select(input_file_name()).as[String].collect()
+    assert(read.nonEmpty && read.forall(f => !f.contains("_temporary") && !f.contains(".spark-staging")))
+  }
+
+  test("appendOnce: an all-empty stream leaves a readable table, and reports read zero rows") {
+    import spark.implicits._
+    val dir = tmpDir("append_once_empty")
+    val docs = Seq.empty[(String, Long)].toDF("source", "n_chars")
+    val events = Seq.empty[(String, Long, Long)].toDF("event_type", "event_id", "ts_ms")
+    for (b <- Seq(0L, 1L)) {
+      graft.api.Stats.appendBatchStats(docs, s"$dir/stats", Seq("source"), "n_chars", "n_chars", b)
+      graft.streaming.StreamOps.lateDataIngestBatch(events, b, s"$dir/late")
+    }
+    assert(Util.readBatched(spark, s"$dir/stats").schema("batch_id").dataType === LongType)
+    assert(graft.api.Stats.mergedSummary(spark, s"$dir/stats", Seq("source")).count() === 0)
+    assert(graft.streaming.StreamOps.lateDataReport(spark, s"$dir/late").count() === 0)
+  }
+
+  test("appendOnce: a new batch on an existing table starts one Spark job, its write") {
+    import spark.implicits._
+    val path = s"${tmpDir("append_once_jobs")}/state"
+    Util.appendOnce(spark, path, 0L)(Seq(("x", 1L)).toDF("k", "n"))
+    val rec = new Profile.Recorder(spark)
+    try {
+      rec.phase("new")(Util.appendOnce(spark, path, 1L)(Seq(("y", 2L)).toDF("k", "n")))
+      assert(rec.jobs("new").size === 1)
+    } finally rec.close()
   }
 
   test("appendOnce: an empty directory and a _temporary-only directory both get the append") {
@@ -100,16 +161,15 @@ class UtilSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmpDir("append_once_task")
     val path = s"$dir/state"
-    Seq(("x", 1L)).toDF("k", "n").withColumn("batch_id", lit(3L)).write.parquet(path)
+    Util.appendOnce(spark, path, 3L)(Seq(("x", 1L)).toDF("k", "n"))
     // batch 4's first attempt: one task committed its file into the job
     // attempt directory, then the driver died before the job commit
-    Seq(("y", 2L)).toDF("k", "n").withColumn("batch_id", lit(4L))
-      .coalesce(1).write.parquet(s"$dir/attempt")
-    val task = new java.io.File(s"$path/_temporary/0/task_0")
+    Seq(("y", 2L)).toDF("k", "n").coalesce(1).write.parquet(s"$dir/attempt")
+    val task = new java.io.File(s"$path/batch_id=4/_temporary/0/task_0")
     task.mkdirs()
     val part = new java.io.File(s"$dir/attempt").listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.move(part.toPath, new java.io.File(task, part.getName).toPath)
-    assert(!Util.batchAlreadyApplied(spark, path, 4L))
+    assert(spark.read.parquet(path).count() === 1, "a dead attempt's committed task is never read")
     Util.appendOnce(spark, path, 4L)(Seq(("y", 2L)).toDF("k", "n"))
     assert(batchRows(path, 4L) === 1)
     assert(batchRows(path, 3L) === 1)
@@ -386,4 +446,13 @@ class UtilSpec extends SparkSpec {
     assert(got.nonEmpty)
     assert(got === selfJoin(() => spark.read.parquet(s"$sf/nation.parquet")))
   }
+}
+
+object UtilSpec {
+  /** Arm the one-shot task failure of the appendOnce fault test and
+    * record that it struck after a task commit; tasks run in this JVM,
+    * so they share the flags.
+    */
+  val failOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val sawCommit = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

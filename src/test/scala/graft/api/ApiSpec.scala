@@ -254,7 +254,6 @@ class ApiSpec extends SparkSpec {
 
   test("dupNgramFrac measures within-document repetition exactly") {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val df = Seq(
       (1L, "a b a b a"),            // tokens: 5 total / 2 distinct; bigrams: 4/2
       (2L, "w x y z"),              // no repetition at any n

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class FunctionsSpec extends SparkSpec {
 
   test("VectorDot: bit-identical to the zip_with/aggregate fold on real embeddings") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(100)
       .select($"vec_id", $"embedding".as("a"), $"embedding".as("b"))
@@ -21,7 +20,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("VectorDot: null in, null out") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Some(Array(1.0f, 2.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
@@ -30,7 +28,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("VectorDot: mismatched lengths → null (same as the HOF fold)") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
       .toDF("a", "b")
@@ -50,7 +47,6 @@ class FunctionsSpec extends SparkSpec {
     val expected = -(0.75 * math.log(0.75) + 0.25 * math.log(0.25)) / math.log(2.0)
     assert(math.abs(TextHash.charEntropy("aaab") - expected) < 1e-12)
 
-    TextHashFunctions.register(spark)
     import spark.implicits._
     val rows = Seq((1L, Some("abab")), (2L, None))
       .toDF("id", "t")
@@ -118,7 +114,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("jaroWinkler: known values, symmetry, bounds, identity, null passthrough") {
-    StringSimFunctions.register(spark)
     import spark.implicits._
     // classic textbook pairs
     assert(math.abs(StringSimOps.jaroWinkler(

@@ -11,7 +11,6 @@ class ShingleExprSpec extends SparkSpec {
 
   test("text_shingles equals the transform/slice/array_join/array_distinct formulation") {
     import spark.implicits._
-    ShingleFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("toks", split($"text", " "))
       .filter(size($"toks") >= 4)
@@ -30,7 +29,6 @@ class ShingleExprSpec extends SparkSpec {
 
   test("text_shingles drops docs with fewer than n tokens via empty array") {
     import spark.implicits._
-    ShingleFunctions.register(spark)
     val df = Seq("a b c", "a b c d", "", "a  b c d").toDF("text")
       .select($"text", ShingleFunctions.textShingles($"text", 4).as("sh"))
       .collect()
@@ -60,7 +58,6 @@ class ShingleExprSpec extends SparkSpec {
 
   test("minhash_sigs equals the md5-slice min formulation per seed") {
     import spark.implicits._
-    ShingleFunctions.register(spark)
     val base = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("toks", split($"text", " "))
       .filter(size($"toks") >= 4)

@@ -39,10 +39,9 @@ class ReplicatorSpec extends SparkSpec {
   test("parse: UTF-8 decode + JSON extraction keeps commitTimestamp a string (Handler.java:74,86)") {
     import spark.implicits._
     val df = Replicator.parse(Seq(rec("s", "1", "49", 1000L, 2049761200L, "2021-10-12T19:16:14Z")).toDS().toDF())
-    val row = df.select($"cdc_key", $"commitTimestamp", $"payload_text").head()
+    val row = df.select($"cdc_key", $"commitTimestamp").head()
     assert(row.getLong(0) === 2049761200L)
     assert(row.getString(1) === "2021-10-12T19:16:14Z")
-    assert(row.getString(2).contains("commitTimestamp"))
     assert(df.schema("commitTimestamp").dataType.typeName === "string")
   }
 

@@ -23,6 +23,13 @@ class StreamOpsSpec extends SparkSpec {
 
   case class Evt(ts: Timestamp, event_type: String, user_id: Long, value: Double, id: Long)
 
+  /** Every row of an appendOnce table, each column as a string, sorted. */
+  private def rowsOf(path: String): Seq[String] = {
+    val df = graft.Util.readBatched(spark, path)
+    df.select(df.columns.map(c => df(c).cast("string")): _*).collect()
+      .map(_.mkString("|")).sorted.toSeq
+  }
+
   private def t(minute: Int, sec: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
 
@@ -1171,12 +1178,11 @@ class StreamOpsSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(est("alpha") >= 3L && est("gamma") >= 1L)
 
-    val rowsBefore = spark.read.parquet(sketchDir).count()
+    val before = rowsOf(sketchDir)
     graft.api.Stats.appendCmsBatchIdempotent(
-      Seq("zeta").toDF("text"), sketchDir, "text", batchId = 0L,
+      Seq("alpha", "beta", "alpha").toDF("text"), sketchDir, "text", batchId = 0L,
       depth = 3, width = 64)
-    assert(spark.read.parquet(sketchDir).count() === rowsBefore,
-      "replayed batchId must not append")
+    assert(rowsOf(sketchDir) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("incrementalStats: micro-batches append mergeable stats; summary covers all batches; replay appends once") {
@@ -1207,15 +1213,20 @@ class StreamOpsSpec extends SparkSpec {
     assert(summary("s1").getAs[Long]("n_rows") === 2L)
     assert(summary("s1").getAs[Long]("v_sum") === 22L)
 
-    // at-least-once replay: re-delivering an already-appended batchId is
-    // a no-op, a NEW batchId appends
-    val rowsBefore = spark.read.parquet(statsDir).count()
-    val replay = Seq(("s0", 99L)).toDF("source", "n_chars")
-      .withColumn("doc_id", lit(99L))
-    graft.api.Stats.appendBatchStatsIdempotent(replay, statsDir,
+    // at-least-once replay: re-delivering batch 0 rewrites the same
+    // rows, a NEW batchId appends
+    def merged = graft.api.Stats.mergedSummary(spark, statsDir, Seq("source"))
+      .collect().map(_.toString).sorted.toSeq
+    val (rowsBefore, mergedBefore) = (spark.read.parquet(statsDir).count(), merged)
+    val batch0 = Seq(("s0", 5L, 0L), ("s1", 8L, 1L), ("s0", 6L, 2L))
+      .toDF("source", "n_chars", "doc_id")
+    graft.api.Stats.appendBatchStats(batch0, statsDir,
       Seq("source"), "n_chars", "doc_id", batchId = 0L)
     assert(spark.read.parquet(statsDir).count() === rowsBefore, "replayed batchId must not append")
-    graft.api.Stats.appendBatchStatsIdempotent(replay, statsDir,
+    assert(merged === mergedBefore)
+    val replay = Seq(("s0", 99L)).toDF("source", "n_chars")
+      .withColumn("doc_id", lit(99L))
+    graft.api.Stats.appendBatchStats(replay, statsDir,
       Seq("source"), "n_chars", "doc_id", batchId = 7L)
     assert(spark.read.parquet(statsDir).count() === rowsBefore + 1)
   }
@@ -1255,11 +1266,12 @@ class StreamOpsSpec extends SparkSpec {
       }
     }
 
-    // at-least-once replay: re-delivered batchId appends nothing
-    val before = spark.read.parquet(countsPath).count()
+    // at-least-once replay: re-delivered batch 0 rewrites the same rows
+    val before = rowsOf(countsPath)
     graft.api.Stats.appendDailyCountsIdempotent(
-      Seq(KV("a", 9.0)).toDF("k", "v"), countsPath, "k", "v", batchId = 0L)
-    assert(spark.read.parquet(countsPath).count() === before)
+      (Seq.fill(10)(KV("a", 1.0)) ++ Seq.fill(4)(KV("a", 2.0)) ++
+        Seq.fill(6)(KV("b", 1.0))).toDF("k", "v"), countsPath, "k", "v", batchId = 0L)
+    assert(rowsOf(countsPath) === before)
   }
 
   test("growthIngestStream: min-merged first sightings reproduce the batch growth curve; replay appends once") {
@@ -1283,11 +1295,11 @@ class StreamOpsSpec extends SparkSpec {
     // first sightings: a→3, b→5, c→6
     assert(got === Map(3L -> (1L, 1L), 5L -> (1L, 2L), 6L -> (1L, 3L)))
 
-    val before = spark.read.parquet(path).count()
+    val before = rowsOf(path)
     graft.api.Stats.appendFirstSeenIdempotent(
-      Seq(KV("z", 1.0)).toDF("k", "v"), path, "k", "v", batchId = 0L)
-    assert(spark.read.parquet(path).count() === before,
-      "replayed batchId must not append")
+      Seq(KV("a", 5.0), KV("a", 7.0), KV("b", 5.0)).toDF("k", "v"), path, "k", "v",
+      batchId = 0L)
+    assert(rowsOf(path) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("extremesIngestStream: max-merged daily maxima reproduce the batch Gumbel fit; replay appends once") {
@@ -1329,12 +1341,10 @@ class StreamOpsSpec extends SparkSpec {
     // return levels widen with horizon
     assert(view.getAs[Double]("rl_7d") <= view.getAs[Double]("rl_90d"))
 
-    val before = spark.read.parquet(path).count()
+    val before = rowsOf(path)
     graft.operators.EventOps.appendDailyMaxIdempotent(
-      Seq(("view", 10L, 9999L)).toDF("event_type", "day", "v_e2"), path,
-      batchId = 0L)
-    assert(spark.read.parquet(path).count() === before,
-      "replayed batchId must not append")
+      b1.toDF("event_type", "day", "v_e2"), path, batchId = 0L)
+    assert(rowsOf(path) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("calibrationIngestStream: sum-merged bins reproduce the batch Brier decomposition; replay appends once") {
@@ -1373,11 +1383,10 @@ class StreamOpsSpec extends SparkSpec {
         r.getAs[Double]("uncertainty") + r.getAs[Double]("within_bin_var")))
       < 5e-6)
 
-    val before = spark.read.parquet(path).count()
+    val before = rowsOf(path)
     graft.operators.ModelOps.appendCalibrationBatchIdempotent(
-      asPy(Seq(KV("1", 0.5)).toDF()), path, batchId = 0L)
-    assert(spark.read.parquet(path).count() === before,
-      "replayed batchId must not append")
+      asPy(b1.toDF()), path, batchId = 0L)
+    assert(rowsOf(path) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("srmIngestStream: min-merged enrollment reproduces the batch SRM card; replay appends once") {
@@ -1410,12 +1419,11 @@ class StreamOpsSpec extends SparkSpec {
     assert(got.map(_.getAs[Long]("week")).toSet === Set(0L, 1L, 2L))
     assert(got.map(r => r.getAs[Long]("n_a") + r.getAs[Long]("n_b")).sum === 4L)
 
-    val before = spark.read.parquet(path).count()
+    val before = rowsOf(path)
     graft.api.Stats.appendFirstSeenIdempotent(
-      Seq((9L, 1L)).toDF("user_id", "day"), path, "user_id", "day",
+      Seq((1L, 9L), (2L, 8L), (3L, 15L)).toDF("user_id", "day"), path, "user_id", "day",
       batchId = 0L)
-    assert(spark.read.parquet(path).count() === before,
-      "replayed batchId must not append")
+    assert(rowsOf(path) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("cdcDiffIngestStream: argmax-merged state reproduces the batch snapshot diff; replay appends once") {
@@ -1520,13 +1528,13 @@ class StreamOpsSpec extends SparkSpec {
     assert(math.abs(psiB - psiOf(refVals, (0 until 40).map(200.0 + _))) < 1e-9)
     assert(psiB > 1.0 && psiA < 0.01, s"shifted key must dominate: $psiA vs $psiB")
 
-    // at-least-once replay: re-delivered batchId appends nothing
-    val before = spark.read.parquet(binsPath).count()
+    // at-least-once replay: re-delivered batch 0 rewrites the same rows
+    val before = rowsOf(binsPath)
     graft.api.Stats.appendPsiBatchIdempotent(
-      Seq(KV("a", 3.0)).toDF("k", "v"), refPath, binsPath, "k", "v",
-      batchId = 0L)
-    assert(spark.read.parquet(binsPath).count() === before,
-      "replayed batchId must not append")
+      ((0 until 50).map(i => KV("a", i.toDouble)) ++
+        (0 until 20).map(i => KV("b", 200.0 + i))).toDF("k", "v"),
+      refPath, binsPath, "k", "v", batchId = 0L)
+    assert(rowsOf(binsPath) === before, "a replayed batch must rewrite the same rows")
 
     // keys with no reference baseline are dropped, not scored
     graft.api.Stats.appendPsiBatchIdempotent(
@@ -1604,12 +1612,12 @@ class StreamOpsSpec extends SparkSpec {
     assert(math.abs(jsd - want) < 1e-12)
     assert(jsd > 0.0 && jsd <= math.log(2.0))
 
-    val before = spark.read.parquet(countsPath).count()
+    val before = rowsOf(countsPath)
     graft.api.Stats.appendCatBatchIdempotent(
-      Seq(KV("x", 0.0)).toDF("k", "v").select(lit("m").as("key"), $"k".as("cat_v")),
+      (Seq.fill(30)(KV("x", 0.0)) ++ Seq.fill(30)(KV("y", 0.0))).toDF("k", "v")
+        .select(lit("m").as("key"), $"k".as("cat_v")),
       countsPath, "key", "cat_v", batchId = 0L)
-    assert(spark.read.parquet(countsPath).count() === before,
-      "replayed batchId must not append")
+    assert(rowsOf(countsPath) === before, "a replayed batch must rewrite the same rows")
   }
 
   test("dsirGateStream: stream admissions equal batch scoring; gate is stateless across batches") {
@@ -1772,6 +1780,29 @@ class StreamOpsSpec extends SparkSpec {
     val batch = graft.operators.EventOps.q243LateDataAudit(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(live === batch)
+  }
+
+  test("late-data ingest: a crash between the agg and marks writes replays to the clean report") {
+    import spark.implicits._
+    val ev = graft.Util.events(spark, sf)
+      .select($"event_type", $"event_id", $"ts_ms")
+    val ids = ev.select($"event_id").collect().map(_.getLong(0)).sorted
+    val (c1, c2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
+    val batches = Seq(ev.filter($"event_id" <= c1),
+      ev.filter($"event_id" > c1 && $"event_id" <= c2), ev.filter($"event_id" > c2))
+    val (clean, dir) = (tmpDir("latedata_clean"), tmpDir("latedata_crash"))
+    for (d <- Seq(clean, dir); (b, i) <- batches.zipWithIndex)
+      StreamOps.lateDataIngestBatch(b, i.toLong, d)
+    // the state a crash after batch 2's agg write and before its marks
+    // write leaves: its bucket partials present, its mark absent
+    val mark2 = new java.io.File(s"$dir/marks/batch_id=2")
+    org.apache.commons.io.FileUtils.deleteDirectory(mark2)
+    assert(!mark2.exists() && new java.io.File(s"$dir/agg/batch_id=2").exists())
+    StreamOps.lateDataIngestBatch(batches(2), 2L, dir)
+    def report(d: String) = StreamOps.lateDataReport(spark, d).collect().map(_.toSeq).toSeq
+    assert(report(dir) === report(clean))
+    assert(report(dir) === graft.operators.EventOps.q243LateDataAudit(spark, sf)
+      .collect().map(_.toSeq).toSeq)
   }
 
   test("reconcileIngestStream: sum-merged partials == batch q312 ledger; replay appends once") {
