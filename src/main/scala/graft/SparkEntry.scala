@@ -15,7 +15,8 @@ object SparkEntry {
 
   /** Session settings every entry point needs: graft's functions
     * ([[graft.plans.GraftExtensions]]), UTC, nanos-as-long for the events
-    * table (parquet TIMESTAMP(NANOS)), AQE on.
+    * table (parquet TIMESTAMP(NANOS)), AQE on, and `file:` paths through
+    * [[NioLocalFileSystem]] / [[NioLocalFs]].
     */
   def configure(builder: SparkSession.Builder): SparkSession.Builder = builder
     .withExtensions(new graft.plans.GraftExtensions)
@@ -32,6 +33,10 @@ object SparkEntry {
     // suite's fragments: ~25k entries of compiled-class bytecode is a
     // few hundred MB against the 128 GiB heap.
     .config("spark.sql.codegen.cache.maxEntries", "25000")
+    // local files through java.nio: Hadoop's own local filesystem forks
+    // chmod/readlink per file it creates and per FileContext rename
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   /** Cores of a main's `local[n]` session: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
